@@ -787,8 +787,8 @@ object Bench {
 
   /** The 500k serving point (r12 verdict item 2): the operating point
     * where IVF pruning actually SHOWS. At 50k vectors the ~150 us fixed
-    * per-query cost dominates both flat and pruned scans (IvfServeProbe,
-    * NOTES_r12 §3) — at 500k the flat scan is 10x the work while the
+    * per-query cost dominates both flat and pruned scans (enginebench
+    * `serve`, NOTES_r12 §3) — at 500k the flat scan is 10x the work while the
     * pruned scan grows only with nprobe/numCells of it, so the pruning
     * multiple becomes measurable. The corpus is CLUSTERED (1,000 centers,
     * the natural extension of benchmark_suite.py:96's size ladder to a
@@ -1026,8 +1026,9 @@ object Bench {
         .sum / truth.length
     val cells = 128
     val nprobe = 8
-    // the recall-1.0 knee on this corpus (IvfQuantServeProbe: candK 256 ->
-    // 0.68/0.75, candK 512 -> 1.000/1.000): the rescore funnel is
+    // the recall-1.0 knee on this corpus (candK 256 -> 0.68/0.75, candK
+    // 512 -> 1.000/1.000; enginebench `serve` runs candK 512 and reports
+    // each tier's recall_at_10 on its own clustered corpus): the rescore funnel is
     // corpus-size-INDEPENDENT work, so the composed tiers sit at IVF-flat
     // parity at 500k and pull ahead as the scan term grows with corpus
     val candK = 512

@@ -134,160 +134,6 @@ final class QuantizedIndex private (
   }
 }
 
-/** In-process (driver-side) index: same scores as the distributed path
-  * (bitwise), no job scheduling per query. The corpus is repacked into ONE
-  * contiguous short[] and scanned by a fixed thread pool over row ranges —
-  * SIMD inner loop, ~microseconds per 50k x 128 search. */
-final class LocalIndex(blocks: Array[VectorBlock], val dim: Int) {
-
-  val count: Int = blocks.map(_.n).sum
-
-  private val data = new Array[Short](count * dim)
-  private val ids = new Array[Long](count)
-  private val rowNorms = new Array[Long](count)
-  locally {
-    var off = 0
-    blocks.foreach { blk =>
-      var r = 0
-      while (r < blk.n) {
-        val srcBase = r * dim
-        val dstBase = (off + r) * dim
-        var j = 0
-        while (j < dim) { data(dstBase + j) = blk.data(srcBase + j).toShort; j += 1 }
-        ids(off + r) = blk.ids(r)
-        var s = 0L
-        var i = srcBase
-        val end = srcBase + dim
-        while (i < end) { val x = blk.data(i).toLong; s += x * x; i += 1 }
-        rowNorms(off + r) = s
-        r += 1
-      }
-      off += blk.n
-    }
-  }
-
-  // worker gang; a chunk is >= MinChunk rows so small corpora don't pay
-  // dispatch overhead
-  private val MinChunk = 2048
-  private val maxThreads =
-    math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private val gangSize = math.max(1, math.min(maxThreads, count / MinChunk))
-  private val gang = if (gangSize > 1) new ScanGang(gangSize) else null
-
-  // Concurrency model (NOT the reference's RLock, pythonvectordb.py:362,
-  // which serializes every search): a lone caller takes the whole scan
-  // gang for minimum latency; when callers overlap, each extra caller
-  // scans the corpus on its OWN thread instead of queueing, so aggregate
-  // throughput scales with cores. The corpus arrays are immutable after
-  // construction, so unsynchronized reads are safe; TopKBuffer's total
-  // (score desc, id asc) order makes chunked-merge and sequential-scan
-  // results bitwise identical (asserted by SimdSpec).
-  private val gangLock = new java.util.concurrent.locks.ReentrantLock()
-
-  /** Thread-parallel SIMD scan, deterministic merge. */
-  def search(q: Array[Byte], k: Int): Seq[(Long, Double)] = {
-    require(q.length == dim, s"query dimension ${q.length} != $dim")
-    val nq = VectorKernels.normSqInt8(q)
-    val qShort = new Array[Short](dim)
-    var i = 0
-    while (i < dim) { qShort(i) = q(i).toShort; i += 1 }
-    val merged = new TopKBuffer(k)
-    if (gang != null && gangLock.tryLock()) {
-      try {
-        val per = (count + gangSize - 1) / gangSize
-        val bufs = new Array[TopKBuffer](gangSize)
-        gang.run { c =>
-          val lo = c * per
-          val hi = math.min(count, lo + per)
-          val buf = new TopKBuffer(k)
-          SimdSupport.scan(data, rowNorms, ids, lo, hi, dim, qShort, nq, buf)
-          bufs(c) = buf
-        }
-        bufs.foreach(merged.mergeFrom)
-      } finally gangLock.unlock()
-    } else {
-      // gang busy (concurrent burst) or corpus too small for fan-out:
-      // full scan on the calling thread
-      SimdSupport.scan(data, rowNorms, ids, 0, count, dim, qShort, nq, merged)
-    }
-    (0 until merged.size).map(j => (merged.ids(j), merged.scores(j)))
-  }
-}
-
-/** Fixed gang of daemon scan workers with spin-then-park waiting: during a
-  * query burst (the serving loop) workers stay spinning and dispatch costs
-  * ~1us; when idle past the spin budget they park and cost nothing. This is
-  * what makes sequential single-query latency competitive with the
-  * reference's in-process prange kernel — a conventional executor pays an
-  * unpark wake-up per worker per query (~0.5ms for a gang of 12+).
-  */
-private[store] final class ScanGang(val n: Int) {
-  import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-  import java.util.concurrent.locks.LockSupport
-
-  private val epoch = new AtomicLong(0)
-  private val done = new AtomicInteger(0)
-  // first failure of the current job; rethrown on the query thread by run()
-  private val failure =
-    new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-  @volatile private var job: Int => Unit = null
-  // ~100k onSpinWait iterations ~ a few hundred microseconds of hot wait
-  private val SpinBudget = 100000
-
-  private final class Worker(id: Int) extends Thread(s"scan-gang-$id") {
-    @volatile var parked = false
-    setDaemon(true)
-    override def run(): Unit = {
-      var seen = 0L
-      while (true) {
-        var spins = 0
-        while (epoch.get() == seen) {
-          Thread.onSpinWait()
-          spins += 1
-          if (spins >= SpinBudget) {
-            parked = true
-            // re-check after publishing parked (run() checks parked AFTER
-            // bumping epoch, so either we see the new epoch or it unparks us)
-            if (epoch.get() == seen) LockSupport.park()
-            parked = false
-            spins = 0
-          }
-        }
-        seen = epoch.get()
-        // A throwing job must NOT propagate out of run(): it would kill
-        // this daemon thread and every later gang.run would hang waiting
-        // for done == n. Stash the first failure; run() rethrows it on
-        // the query thread after the barrier.
-        try job(id)
-        catch { case t: Throwable => failure.compareAndSet(null, t) }
-        finally done.incrementAndGet()
-      }
-    }
-  }
-
-  private val workers = Array.tabulate(n)(new Worker(_))
-  workers.foreach(_.start())
-
-  /** Run job(0..n-1) on the gang; returns when all are done. Callers must
-    * serialize runs: LocalIndex.search only enters here under gangLock
-    * (tryLock winners); losers scan on their own thread instead. Any new
-    * call path must hold that lock — job/done/epoch are shared state. */
-  def run(f: Int => Unit): Unit = {
-    job = f
-    done.set(0)
-    epoch.incrementAndGet()
-    var w = 0
-    while (w < n) {
-      if (workers(w).parked) LockSupport.unpark(workers(w))
-      w += 1
-    }
-    while (done.get() < n) Thread.onSpinWait()
-    job = null
-    val t = failure.getAndSet(null)
-    if (t != null) throw t // worker crash surfaces here, workers stay alive
-  }
-}
-
 object QuantizedIndex {
 
   /** Default ceiling for toLocal's driver-side collect: 4 GiB of packed

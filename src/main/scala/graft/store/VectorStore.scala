@@ -404,7 +404,10 @@ final class VectorStore private (
   def save(path: String, numBuckets: Int = VectorStore.DefaultSaveBuckets): Unit = synchronized {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     if (deletedCount > 0) compact() // pythonvectordb.py:568-569
+    // one task per bucket: without the repartition every task writes one
+    // file into every bucket it meets (partitions x buckets files)
     base.withColumn("id_bucket", idBucket(col("id"), numBuckets))
+      .repartition(col("id_bucket"))
       .write.mode(SaveMode.Overwrite).partitionBy("id_bucket").parquet(s"$path/data")
     val meta = s"""{"version":1,"dimension":$dim,"id_buckets":$numBuckets}"""
     val p = new org.apache.hadoop.fs.Path(path, "store.json")

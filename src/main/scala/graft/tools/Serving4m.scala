@@ -61,7 +61,8 @@ object Serving4m {
       } finally in.close()
     }
 
-    // the Bench/IvfQuantServeProbe clustered-corpus recipe, same seed
+    // the Bench clustered-corpus recipe, same seed (enginebench `serve`
+    // times the same tiers on a clustered corpus of its own)
     val rnd = new scala.util.Random(97)
     val centers = Array.fill(nCenters)(
       Array.fill(dim)(rnd.nextGaussian().toFloat * 3f))

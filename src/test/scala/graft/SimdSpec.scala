@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{SimdKernels, SimdSupport, TextOps, TopKBuffer, VectorKernels}
-import graft.store.{LocalIndex, VectorBlock}
+import graft.store.{LocalBqIndex, LocalIndex, LocalIvfBqIndex, LocalIvfIndex, LocalIvfPqIndex, LocalPqIndex, VectorBlock}
 import org.apache.spark.sql.functions._
 
 /** Parity specs for the round-3 kernels: the SIMD scan must be bitwise
@@ -97,33 +97,54 @@ class SimdSpec extends SparkSpec {
 
   test("concurrent LocalIndex searches equal sequential results bitwise") {
     // The tryLock concurrency model routes overlapping callers onto their
-    // own full-corpus scan instead of queueing on the gang; both paths
-    // must produce identical (score desc, id asc) top-k.
+    // own scan instead of queueing on the gang; both paths must produce
+    // identical (score desc, id asc) top-k, in every tier: flat int8 / PQ /
+    // BQ and IVF int8 / PQ / BQ (the last two through the candidate select
+    // and rescore).
     val dim = 96
     val n = 20000
     val data = new Array[Byte](n * dim)
     rnd.nextBytes(data)
     val ids = Array.tabulate(n)(_.toLong)
-    val idx = new LocalIndex(Array(VectorBlock(ids, data, dim)), dim)
-    val queries = Array.fill(16) {
-      val q = new Array[Byte](dim); rnd.nextBytes(q); q
+    val vecs = Array.tabulate(n)(r => Array.tabulate(dim)(j => data(r * dim + j).toFloat))
+    val (m, kSub) = (graft.ops.PqQueries.M, graft.ops.PqQueries.K)
+    val cb = Array.fill(m * kSub * (dim / m))(rnd.nextGaussian())
+    val pqCodes = new Array[Byte](n * m)
+    (0 until n).foreach(r =>
+      System.arraycopy(VectorKernels.pqEncode(vecs(r), cb, m, kSub), 0, pqCodes, r * m, m))
+    val flat = new LocalIndex(Array(VectorBlock(ids, data, dim)), dim)
+    val pq = new LocalPqIndex(ids, pqCodes, m, kSub, cb)
+    val bq = LocalBqIndex.build(ids, vecs)
+    val ivf = LocalIvfIndex.train(ids, vecs, numCells = 16)
+    val ivfPq = LocalIvfPqIndex.train(ids, vecs, 16, m, kSub, cb)
+    val ivfBq = LocalIvfBqIndex.train(ids, vecs, numCells = 16)
+    val qf = Array.fill(16)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+    val qb = qf.map(VectorKernels.quantize)
+    val tiers: Seq[(String, Int => Seq[(Long, Double)])] = Seq(
+      "flat" -> (qi => flat.search(qb(qi), 10)),
+      "pq" -> (qi => pq.search(qf(qi), 10)),
+      "bq" -> (qi => bq.search(VectorKernels.signPack(qf(qi)), 10)),
+      "ivf" -> (qi => ivf.search(qb(qi), 10, 4)),
+      "ivfpq" -> (qi => ivfPq.search(qf(qi), 10, 4, 200)),
+      "ivfbq" -> (qi => ivfBq.search(qf(qi), 10, 4, 200)))
+    tiers.foreach { case (name, search) =>
+      val expected = Array.tabulate(16)(search)
+      val results = new Array[Seq[(Long, Double)]](16 * 25)
+      val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+      val threads = (0 until 8).map { w =>
+        val th = new Thread(() =>
+          try {
+            (0 until 50).foreach { i =>
+              val qi = (w * 50 + i) % 16
+              results((w * 50 + i) % results.length) = search(qi)
+              assert(results((w * 50 + i) % results.length) == expected(qi))
+            }
+          } catch { case _: Throwable => failures.incrementAndGet() })
+        th.start(); th
+      }
+      threads.foreach(_.join())
+      assert(failures.get() == 0, s"$name: concurrent results differ from sequential ones")
     }
-    val expected = queries.map(q => idx.search(q, 10))
-    val results = new Array[Seq[(Long, Double)]](16 * 25)
-    val failures = new java.util.concurrent.atomic.AtomicInteger(0)
-    val threads = (0 until 8).map { w =>
-      val th = new Thread(() =>
-        try {
-          (0 until 50).foreach { i =>
-            val qi = (w * 50 + i) % 16
-            results((w * 50 + i) % results.length) = idx.search(queries(qi), 10)
-            assert(results((w * 50 + i) % results.length) == expected(qi))
-          }
-        } catch { case _: Throwable => failures.incrementAndGet() })
-      th.start(); th
-    }
-    threads.foreach(_.join())
-    assert(failures.get() == 0)
   }
 
   test("sign_buckets kernel equals the aggregate(zip_with) fold bitwise") {

@@ -116,14 +116,19 @@ class VectorStoreSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val st = VectorStore.create(spark, 4)
-    st.addVectors(mkRows((0 until 40).map(i =>
-      (s"r$i", Seq(i.toFloat / 40, 1f, 0f, 0f), Map("g" -> (i % 3).toString)))))
+    // several adds, each of which lands in its own partitions
+    (0 until 40).grouped(10).foreach(g => st.addVectors(mkRows(g.map(i =>
+      (s"r$i", Seq(i.toFloat / 40, 1f, 0f, 0f), Map("g" -> (i % 3).toString))))))
     val dir = java.nio.file.Files.createTempDirectory("vstore-bucketed").toString
     st.save(dir, numBuckets = 8)
     // the layout is hive-partitioned on the id hash
     val parts = new java.io.File(s"$dir/data").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("id_bucket=")).map(_.getName).toSet
     assert(parts.size > 1, s"expected multiple id_bucket partitions, got $parts")
+    // one file per bucket at most, however many partitions the adds made
+    val files = parts.toSeq.flatMap(p => new java.io.File(s"$dir/data/$p").listFiles()
+      .filter(_.getName.endsWith(".parquet")))
+    assert(files.size <= 8, s"expected at most one parquet file per bucket, got ${files.size}")
 
     def scannedPartitions(df: org.apache.spark.sql.DataFrame): Int = {
       df.collect()
