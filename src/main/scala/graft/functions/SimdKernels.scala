@@ -2,8 +2,9 @@ package graft.functions
 
 import jdk.incubator.vector._
 
-/** SIMD scan kernel for the packed int8 corpora (QuantizedIndex /
-  * LocalIndex) via the JDK Vector API — the Spark-side analog of the
+/** SIMD scan kernel behind the serving engine's exact int8 codec
+  * (store.Int8Codec: QuantizedIndex's per-block engines and the int8
+  * Local*Index tiers) via the JDK Vector API — the Spark-side analog of the
   * reference's Numba `@njit(parallel=True)` kernel (pythonvectordb.py:25-67).
   *
   * The corpus rows are widened once to short[] (2 bytes/component, still 2x

@@ -618,8 +618,8 @@ object PqQueries {
     * Candidates are exact-rescored as in pqTop3. */
   def residualTop3(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.store.IvfIndex.labelCentroids(emb, "residualTop3")
-    val asg = graft.store.IvfIndex.assignCells(emb, cent)
+    val cent = graft.store.IvfLayout.labelCentroids(emb, "residualTop3")
+    val asg = graft.store.IvfLayout.assignCells(emb, cent)
     val resid = asg.join(broadcast(cent), "cell")
       .select(col("vec_id"), col("cell"),
         zip_with(col("embedding"), col("centroid"),

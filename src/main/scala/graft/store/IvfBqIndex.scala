@@ -28,13 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object IvfBqIndex {
 
+  // the BQ codec: packed sign words, no trained sidecar
+  private val signs = IvfLayout.Codec(VectorOps.signPack(col("embedding")).as("code"))
+
   /** Coarse cells + packed sign codes. `emb` needs (vec_id, label,
     * embedding) — cells are per-label means, matching IvfIndex /
     * IvfPqIndex so the three layouts are directly comparable. */
   def build(emb: DataFrame, path: String): Unit = {
-    val cent = IvfIndex.labelCentroids(emb, "IvfBqIndex.build")
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    assignPackWrite(emb, cent, path, SaveMode.Overwrite)
+    val cent = IvfLayout.labelCentroids(emb, "IvfBqIndex.build")
+    IvfLayout.build(IvfLayout.assignCells(emb, cent), signs, cent, path)
   }
 
   /** Incremental append: assign against the frozen centroids, append to
@@ -49,7 +51,7 @@ object IvfBqIndex {
     * once-per-stream maintenance path). */
   def append(emb: DataFrame, path: String, cent: DataFrame): Unit = {
     if (emb.isEmpty) return
-    assignPackWrite(emb, cent, path, SaveMode.Append)
+    IvfLayout.writeCells(IvfLayout.assignCells(emb, cent), signs.code, path, SaveMode.Append)
   }
 
   /** Hamming probe: rank centroids, scan ONLY the top-`nprobe` cells'
@@ -58,10 +60,8 @@ object IvfBqIndex {
     * Hamming distance, no float vector ever read. */
   def probe(spark: SparkSession, path: String, query: Array[Float],
             k: Int, nprobe: Int): DataFrame = {
-    val cells = probedCells(spark, path, query, nprobe)
     val qcode = graft.functions.VectorKernels.signPack(query)
-    spark.read.parquet(s"$path/data")
-      .filter(col("cell").isin(cells: _*))
+    IvfLayout.scanCells(spark, path, probedCells(spark, path, query, nprobe))
       .select(col("vec_id"),
         VectorOps.hamming(col("code"), typedLit(qcode)).as("hamming"))
       .orderBy(col("hamming").asc, col("vec_id"))
@@ -73,20 +73,14 @@ object IvfBqIndex {
     * candK-row equi-join. With candK >= the probed cells' row count this
     * EQUALS the cell-restricted exact search. */
   def probeRescored(spark: SparkSession, path: String, query: Array[Float],
-                    floats: DataFrame, k: Int, candK: Int, nprobe: Int): DataFrame = {
-    val cand = probe(spark, path, query, candK, nprobe).select("vec_id")
-    cand.join(floats.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("vec_id"),
-        VectorOps.cosineFloat(typedLit(query), col("embedding")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+                    floats: DataFrame, k: Int, candK: Int, nprobe: Int): DataFrame =
+    IvfLayout.probeRescored(probe(spark, path, query, candK, nprobe), query, floats, k)
 
   /** The query's top-`nprobe` cells by centroid cosine (sidecar-sized) —
     * identical ranking to the float and PQ indexes'. */
   def probedCells(spark: SparkSession, path: String, query: Array[Float],
                   nprobe: Int): Seq[Int] =
-    IvfIndex.probedCells(spark, path, query, nprobe)
+    IvfLayout.probedCells(spark, path, query, nprobe)
 
   /** Close the maintenance loop for the BQ tier: sign codes are
     * training-free, so the only drifting artifact is the coarse
@@ -95,20 +89,7 @@ object IvfBqIndex {
     * re-assign + re-pack, stage, version `centroids_v<N>`, swap.
     * Returns the archived version number. */
   def rebuild(emb: DataFrame, path: String): Int = {
-    val spark = emb.sparkSession
-    val cent = IvfIndex.labelCentroids(emb, "IvfBqIndex.rebuild")
-    assignPackWrite(emb, cent, path, SaveMode.Overwrite, dataDir = "data_rebuild")
-    val v = IvfIndex.versionSidecars(spark, path, Seq("centroids"))
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    IvfIndex.swapData(spark, path)
-    v
+    val cent = IvfLayout.labelCentroids(emb, "IvfBqIndex.rebuild")
+    IvfLayout.rebuild(IvfLayout.assignCells(emb, cent), signs, cent, path)
   }
-
-  private def assignPackWrite(emb: DataFrame, cent: DataFrame,
-                              path: String, mode: SaveMode,
-                              dataDir: String = "data"): Unit =
-    IvfIndex.assignCells(emb, cent)
-      .select(col("vec_id"),
-        VectorOps.signPack(col("embedding")).as("code"), col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$path/$dataDir")
 }

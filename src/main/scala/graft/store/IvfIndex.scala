@@ -1,9 +1,7 @@
 package graft.store
 
-import graft.functions.VectorOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** IVF index AT REST: the build pass assigns every vector to its nearest
   * coarse centroid and writes the corpus hive-partitioned by cell
@@ -23,33 +21,13 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  /** Per-label mean centroids with the null-cell guard — the coarse
-    * quantizer shared by this index and IvfPqIndex. `emb` needs
-    * (label, embedding). */
-  private[graft] def labelCentroids(emb: DataFrame, caller: String): DataFrame = {
-    require(!emb.isEmpty, s"$caller: empty corpus — nothing to index")
-    // derive dim from the data instead of assuming the fixture's 64
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val cent = emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      .agg(avg(col("x").cast("double")).as("c"))
-      .groupBy(col("label"))
-      .agg(map_from_entries(collect_list(struct(col("pos"), col("c")))).as("cm"))
-      .select(col("label").cast("int").as("cell"),
-        transform(sequence(lit(0), lit(dim - 1)), i => element_at(col("cm"), i)).as("centroid"))
-    // a null cell (label not castable to int) would silently drop its
-    // vectors from every probe — fail the build instead
-    require(cent.filter(col("cell").isNull).isEmpty,
-      s"$caller: non-integer label produced a null cell id")
-    cent
-  }
+  // the float tier's codec: cells store the raw embeddings
+  private val raw = IvfLayout.Codec(col("embedding"))
 
   /** Assignment + partitioned write. `emb` needs (vec_id, label, embedding). */
   def build(emb: DataFrame, path: String): Unit = {
-    val cent = labelCentroids(emb, "IvfIndex.build")
-    assignAndWrite(emb, cent, path, SaveMode.Overwrite)
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
+    val cent = IvfLayout.labelCentroids(emb, "IvfIndex.build")
+    IvfLayout.build(IvfLayout.assignCells(emb, cent), raw, cent, path)
   }
 
   /** Incremental maintenance: assign `emb` against the SAVED centroids
@@ -61,9 +39,8 @@ object IvfIndex {
     * accumulates. Caller appends NEW vec_ids; ids are not deduplicated. */
   def append(emb: DataFrame, path: String): Unit = {
     if (emb.isEmpty) return
-    val spark = emb.sparkSession
-    val cent = spark.read.parquet(s"$path/centroids")
-    assignAndWrite(emb, cent, path, SaveMode.Append)
+    val cent = emb.sparkSession.read.parquet(s"$path/centroids")
+    IvfLayout.writeCells(IvfLayout.assignCells(emb, cent), raw.code, path, SaveMode.Append)
   }
 
   /** Close the maintenance loop q_index_drift measures: re-train the
@@ -77,49 +54,17 @@ object IvfIndex {
     * reproducible, and `centroids/` always serves the latest. Returns
     * the archived version number.
     *
-    * The new layout is staged to `data_rebuild/` while the live layout
-    * keeps serving, then swapped in two metadata renames — the same
-    * read-while-rebuild pattern a 100 TB deployment needs (at that scale
-    * the swap is a table-pointer flip; here it is the filesystem
-    * analog). Unlike the PQ/BQ tiers, this index stores RAW embeddings
-    * in its cells, so the rebuild is self-contained — no side input. */
+    * The new layout is staged while the live layout keeps serving, then
+    * swapped in (IvfLayout.rebuild) — the read-while-rebuild pattern a
+    * 100 TB deployment needs. Unlike the PQ/BQ tiers, this index stores
+    * RAW embeddings in its cells, so the rebuild is self-contained — no
+    * side input. */
   def rebuild(spark: SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
     val data = spark.read.parquet(s"$path/data")
-    val cent = labelCentroids(
+    val cent = IvfLayout.labelCentroids(
       data.select(col("cell").as("label"), col("embedding")), "IvfIndex.rebuild")
-    val staged = s"$path/data_rebuild"
-    assignCells(data.select(col("vec_id"), col("embedding")), cent)
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(staged)
-    val v = versionSidecars(spark, path, Seq("centroids"))
-    cent.write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    swapData(spark, path)
-    v
-  }
-
-  /** Archive each live sidecar dir as `<name>_v<N>` (N = one past the
-    * count of existing centroids versions — centroids is in every tier's
-    * sidecar set, so the counter is shared). Shared by the three at-rest
-    * tiers' rebuilds. */
-  private[store] def versionSidecars(spark: SparkSession, path: String,
-      sidecars: Seq[String]): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // allocate past the HIGHEST surviving archive, not the archive COUNT:
-    // after a vacuumVersions the count is smaller than the max, and a
-    // count-based allocator would reuse a dropped version number — a
-    // probe pinned to that number would silently read a different
-    // quantizer generation
-    val v = Option(fs.globStatus(new Path(s"$path/centroids_v*")))
-      .getOrElse(Array.empty)
-      .flatMap(s => "^centroids_v(\\d+)$".r.findFirstMatchIn(s.getPath.getName)
-        .map(_.group(1).toInt))
-      .foldLeft(0)(math.max) + 1
-    sidecars.foreach { s =>
-      require(fs.rename(new Path(s"$path/$s"), new Path(s"$path/${s}_v$v")),
-        s"rebuild: could not archive ${s}_v$v")
-    }
-    v
+    IvfLayout.rebuild(IvfLayout.assignCells(data.select(col("vec_id"), col("embedding")), cent),
+      raw, cent, path)
   }
 
   /** Retention for the rebuild() sidecar archive: drop every archived
@@ -130,91 +75,20 @@ object IvfIndex {
     * forever). The LIVE sidecars (`centroids/`, `codebook/`, ...) are
     * never touched, so current probes and replicas are unaffected;
     * probes pinned to a KEPT archived version stay reproducible. Works
-    * for all three at-rest tiers (the version counter is shared — see
-    * [[versionSidecars]]). Returns the dropped version numbers. */
-  def vacuumVersions(spark: SparkSession, path: String, keepLast: Int): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    // keepLast=0 would drop the HIGHEST archived version; versionSidecars
-    // then allocates max-surviving+1 = 1 again, reusing dropped version
-    // numbers — the exact pinned-probe hazard versionSidecars exists to
-    // prevent. Same invariant VectorStore.vacuum guards.
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val archived = Option(fs.globStatus(new Path(s"$path/*_v*")))
-      .getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap { s =>
-        "^(.+)_v(\\d+)$".r.findFirstMatchIn(s.getPath.getName)
-          .map(m => (m.group(2).toInt, s.getPath))
-      }
-    val byVersion = archived.groupBy(_._1)
-    val drop = byVersion.keys.toSeq.sorted.dropRight(keepLast)
-    drop.foreach { v =>
-      byVersion(v).foreach { case (_, p) =>
-        require(fs.delete(p, true), s"vacuumVersions: could not drop $p")
-      }
-    }
-    drop
-  }
-
-  /** Swap the staged `data_rebuild/` layout in for `data/` — the
-    * filesystem analog of a table-pointer flip. */
-  private[store] def swapData(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.delete(new Path(s"$path/data"), true),
-      "rebuild: could not drop the previous layout")
-    require(fs.rename(new Path(s"$path/data_rebuild"), new Path(s"$path/data")),
-      "rebuild: could not swap in the staged layout")
-  }
-
-  /** Nearest-centroid assignment (broadcast centroids, deterministic
-    * cell-id tie-break): (vec_id, embedding, cell) — shared with
-    * IvfPqIndex, which projects codes before its write. */
-  private[graft] def assignCells(emb: DataFrame, cent: DataFrame): DataFrame = {
-    val cosQC = {
-      val dot = aggregate(zip_with(col("embedding"), col("centroid"),
-        (x, c) => x.cast("double") * c), lit(0.0), (a, x) => a + x)
-      val na = aggregate(transform(col("embedding"),
-        x => x.cast("double") * x.cast("double")), lit(0.0), (a, x) => a + x)
-      val nb = aggregate(transform(col("centroid"), c => c * c),
-        lit(0.0), (a, x) => a + x)
-      when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot / (sqrt(na) * sqrt(nb)))
-    }
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cell").asc)
-    emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("cell"), cosQC.as("cs"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-  }
-
-  /** assignCells + hive-partitioned write of (vec_id, embedding). */
-  private def assignAndWrite(emb: DataFrame, cent: DataFrame,
-                             path: String, mode: SaveMode): Unit =
-    assignCells(emb, cent)
-      .write.mode(mode).partitionBy("cell").parquet(s"$path/data")
+    * for all three at-rest tiers (the version counter is shared).
+    * Returns the dropped version numbers. */
+  def vacuumVersions(spark: SparkSession, path: String, keepLast: Int): Seq[Int] =
+    IvfLayout.vacuumVersions(spark, path, keepLast)
 
   /** Rank centroids against the query (the sidecar is num_cells rows —
     * tiny by construction), then scan only the top-`nprobe` cells. */
   def probe(spark: SparkSession, path: String, query: Array[Float],
-            k: Int, nprobe: Int): DataFrame = {
-    val cells = probedCells(spark, path, query, nprobe)
-    spark.read.parquet(s"$path/data")
-      .filter(col("cell").isin(cells: _*))
-      .select(col("vec_id"),
-        VectorOps.cosineFloat(typedLit(query), col("embedding")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+            k: Int, nprobe: Int): DataFrame =
+    IvfLayout.exactTop(
+      IvfLayout.scanCells(spark, path, probedCells(spark, path, query, nprobe)), query, k)
 
   /** The query's top-`nprobe` cells by centroid cosine. */
   def probedCells(spark: SparkSession, path: String, query: Array[Float],
                   nprobe: Int): Seq[Int] =
-    spark.read.parquet(s"$path/centroids")
-      .select(col("cell"),
-        VectorOps.cosineFloat(typedLit(query), col("centroid").cast("array<float>")).as("cs"))
-      .orderBy(col("cs").desc, col("cell"))
-      .limit(nprobe)
-      .collect().map(_.getInt(0)).toSeq
+    IvfLayout.probedCells(spark, path, query, nprobe)
 }

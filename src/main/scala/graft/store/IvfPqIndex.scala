@@ -33,17 +33,23 @@ import org.apache.spark.sql.functions._
   */
 object IvfPqIndex {
 
+  /** The PQ codec configuration: M-byte codes of the (OPQ-rotated, when
+    * `rot` is given) embedding against the frozen codebook, which is
+    * written — with the rotation — as the layout's vector sidecars. Cell
+    * assignment uses the ORIGINAL embedding either way. */
+  private def codec(cb: Array[Double], rot: Option[Array[Double]]): IvfLayout.Codec = {
+    val coding = rot.fold(col("embedding"))(VectorOps.rotateMat(col("embedding"), _))
+    IvfLayout.Codec(VectorOps.pqEncode(coding, cb, PqQueries.M, PqQueries.K).as("codes"),
+      Seq("codebook" -> cb) ++ rot.map("rotation" -> _))
+  }
+
   /** Coarse cells + PQ codes + both sidecars. `emb` needs
     * (vec_id, label, embedding) — cells are per-label means, matching
     * IvfIndex so the two layouts are directly comparable. */
   def build(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
     val cb = PqQueries.trainCodebookOn(emb)
-    writeCodebook(spark, cb, path)
-    // coarse quantizer + null guard shared with the float index
-    val cent = IvfIndex.labelCentroids(emb, "IvfPqIndex.build")
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    assignEncodeWrite(emb, cent, cb, None, path, SaveMode.Overwrite)
+    val cent = IvfLayout.labelCentroids(emb, "IvfPqIndex.build")
+    IvfLayout.build(IvfLayout.assignCells(emb, cent), codec(cb, None), cent, path)
   }
 
   /** As build, with the OPQ rotation (Ge et al. 2013 — see PqQueries.
@@ -54,13 +60,9 @@ object IvfPqIndex {
     * existing cells stay comparable). Probes rotate the query before the
     * LUT; everything else — pruning, ADC, rescore — is unchanged. */
   def buildOpq(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
     val (rot, cb) = PqQueries.trainOpqOn(emb)
-    writeCodebook(spark, cb, path)
-    writeRotation(spark, rot, path)
-    val cent = IvfIndex.labelCentroids(emb, "IvfPqIndex.buildOpq")
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    assignEncodeWrite(emb, cent, cb, Some(rot), path, SaveMode.Overwrite)
+    val cent = IvfLayout.labelCentroids(emb, "IvfPqIndex.buildOpq")
+    IvfLayout.build(IvfLayout.assignCells(emb, cent), codec(cb, Some(rot)), cent, path)
   }
 
   /** As build, with RESIDUAL coding (the actual FAISS IVF-PQ design,
@@ -72,44 +74,31 @@ object IvfPqIndex {
     * per-(query, cell) constant q·c back to the ADC score. Mutually
     * exclusive with the OPQ rotation. */
   def buildResidual(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
-    val cent = IvfIndex.labelCentroids(emb, "IvfPqIndex.buildResidual")
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    val resid = residualsOf(emb, cent).localCheckpoint(true)
-    val cb = PqQueries.trainCodebookOn(
-      resid.select(col("vec_id"), col("embedding")))
-    writeCodebook(spark, cb, path)
-    writeResidualMarker(spark, path)
-    encodeResidualWrite(resid, cb, path, SaveMode.Overwrite)
+    val cent = IvfLayout.labelCentroids(emb, "IvfPqIndex.buildResidual")
+    val (resid, cb) = residualCoded(emb, cent)
+    IvfLayout.build(resid, codec(cb, None), cent, path)
+    IvfLayout.writeVector(emb.sparkSession, path, "residual", Array(1.0)) // presence is the flag
   }
 
   /** (vec_id, cell, embedding = x - c(cell) as float) — the residual
     * corpus both the codebook training and the encode consume. */
   private def residualsOf(emb: DataFrame, cent: DataFrame): DataFrame =
-    IvfIndex.assignCells(emb, cent).join(broadcast(cent), "cell")
+    IvfLayout.assignCells(emb, cent).join(broadcast(cent), "cell")
       .select(col("vec_id"), col("cell"),
         zip_with(col("embedding"), col("centroid"),
           (x, c) => (x.cast("double") - c).cast("float")).as("embedding"))
 
-  private def encodeResidualWrite(resid: DataFrame, cb: Array[Double],
-      path: String, mode: SaveMode, dataDir: String = "data"): Unit =
-    resid.select(col("vec_id"),
-        VectorOps.pqEncode(col("embedding"), cb, PqQueries.M, PqQueries.K).as("codes"),
-        col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$path/$dataDir")
-
-  private def writeResidualMarker(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    Seq(1).toDF("residual").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/residual")
+  /** The residual corpus against `cent` (checkpointed: training and encode
+    * both read it) and the codebook trained on it. */
+  private def residualCoded(emb: DataFrame, cent: DataFrame): (DataFrame, Array[Double]) = {
+    val resid = residualsOf(emb, cent).localCheckpoint(true)
+    (resid, PqQueries.trainCodebookOn(resid.select(col("vec_id"), col("embedding"))))
   }
 
   /** The residual format flag (presence of `residual/` — old indexes
     * read unchanged). */
-  def isResidual(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/residual")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def isResidual(spark: SparkSession, path: String): Boolean =
+    IvfLayout.has(spark, path, "residual")
 
   /** Incremental append: encode against the FROZEN saved codebook (and
     * rotation, if the index is OPQ-built), assign against the frozen
@@ -136,10 +125,13 @@ object IvfPqIndex {
   def append(emb: DataFrame, path: String, cent: DataFrame,
              cb: Array[Double], rot: Option[Array[Double]]): Unit = {
     if (emb.isEmpty) return
-    if (isResidual(emb.sparkSession, path)) {
-      require(rot.isEmpty, "residual and OPQ coding are mutually exclusive")
-      encodeResidualWrite(residualsOf(emb, cent), cb, path, SaveMode.Append)
-    } else assignEncodeWrite(emb, cent, cb, rot, path, SaveMode.Append)
+    val rows =
+      if (!isResidual(emb.sparkSession, path)) IvfLayout.assignCells(emb, cent)
+      else {
+        require(rot.isEmpty, "residual and OPQ coding are mutually exclusive")
+        residualsOf(emb, cent)
+      }
+    IvfLayout.writeCells(rows, codec(cb, rot).code, path, SaveMode.Append)
   }
 
   /** ADC probe: rank centroids, scan ONLY the top-`nprobe` cells' code
@@ -157,8 +149,6 @@ object IvfPqIndex {
     }
     val lut = graft.functions.VectorKernels.pqLut(codingQuery, cb,
       PqQueries.M, PqQueries.K)
-    val scan = spark.read.parquet(s"$path/data")
-      .filter(col("cell").isin(cells: _*))
     val adc =
       if (!isResidual(spark, path))
         VectorOps.pqAdc(col("codes"), typedLit(lut), PqQueries.K)
@@ -179,7 +169,8 @@ object IvfPqIndex {
           when(col("cell") === cell, qc).otherwise(acc)
         } + VectorOps.pqAdc(col("codes"), typedLit(lut), PqQueries.K)
       }
-    scan.select(col("vec_id"), adc.as("adc"))
+    IvfLayout.scanCells(spark, path, cells)
+      .select(col("vec_id"), adc.as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))
       .limit(k)
   }
@@ -189,14 +180,8 @@ object IvfPqIndex {
     * equi-join — and the exact top-k of that. With candK >= the probed
     * cells' row count this EQUALS the cell-restricted exact search. */
   def probeRescored(spark: SparkSession, path: String, query: Array[Float],
-                    floats: DataFrame, k: Int, candK: Int, nprobe: Int): DataFrame = {
-    val cand = probe(spark, path, query, candK, nprobe).select("vec_id")
-    cand.join(floats.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("vec_id"),
-        VectorOps.cosineFloat(typedLit(query), col("embedding")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+                    floats: DataFrame, k: Int, candK: Int, nprobe: Int): DataFrame =
+    IvfLayout.probeRescored(probe(spark, path, query, candK, nprobe), query, floats, k)
 
   /** Close the maintenance loop for the PQ tier: re-train the codebook
     * (and the OPQ rotation, when the index was OPQ-built — the presence
@@ -209,93 +194,37 @@ object IvfPqIndex {
     * Returns the archived version number. */
   def rebuild(emb: DataFrame, path: String): Int = {
     val spark = emb.sparkSession
-    val wasOpq = readRotation(spark, path).isDefined
-    val cent = IvfIndex.labelCentroids(emb, "IvfPqIndex.rebuild")
+    val wasOpq = IvfLayout.has(spark, path, "rotation")
+    val cent = IvfLayout.labelCentroids(emb, "IvfPqIndex.rebuild")
     if (isResidual(spark, path)) {
       // residual tier: residuals against the NEW centroids, codebook
       // re-trained on them; the marker sidecar is format, not a frozen
       // artifact — it stays
       require(!wasOpq, "residual and OPQ coding are mutually exclusive")
-      val resid = residualsOf(emb, cent).localCheckpoint(true)
-      val cb = PqQueries.trainCodebookOn(
-        resid.select(col("vec_id"), col("embedding")))
-      encodeResidualWrite(resid, cb, path, SaveMode.Overwrite,
-        dataDir = "data_rebuild")
-      val v = IvfIndex.versionSidecars(spark, path, Seq("centroids", "codebook"))
-      writeCodebook(spark, cb, path)
-      cent.write.mode("overwrite").parquet(s"$path/centroids")
-      IvfIndex.swapData(spark, path)
-      return v
+      val (resid, cb) = residualCoded(emb, cent)
+      IvfLayout.rebuild(resid, codec(cb, None), cent, path)
+    } else {
+      val (rot, cb) =
+        if (wasOpq) { val (r, c) = PqQueries.trainOpqOn(emb); (Some(r), c) }
+        else (None, PqQueries.trainCodebookOn(emb))
+      IvfLayout.rebuild(IvfLayout.assignCells(emb, cent), codec(cb, rot), cent, path)
     }
-    val (rot, cb) =
-      if (wasOpq) { val (r, c) = PqQueries.trainOpqOn(emb); (Some(r), c) }
-      else (None, PqQueries.trainCodebookOn(emb))
-    // stage first: the staged write reads only `emb` + the new artifacts,
-    // so the live layout keeps serving until the swap
-    assignEncodeWrite(emb, cent, cb, rot, path, SaveMode.Overwrite,
-      dataDir = "data_rebuild")
-    val v = IvfIndex.versionSidecars(spark, path,
-      Seq("centroids", "codebook") ++ (if (wasOpq) Seq("rotation") else Nil))
-    writeCodebook(spark, cb, path)
-    rot.foreach(writeRotation(spark, _, path))
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    IvfIndex.swapData(spark, path)
-    v
   }
 
   /** The query's top-`nprobe` cells by centroid cosine (sidecar-sized) —
     * identical ranking to the float index's. */
   def probedCells(spark: SparkSession, path: String, query: Array[Float],
                   nprobe: Int): Seq[Int] =
-    IvfIndex.probedCells(spark, path, query, nprobe)
-
-  /** IvfIndex's shared nearest-centroid assignment, then the (optionally
-    * rotated) PQ encode projection before the partitioned write — codes
-    * at rest, no floats. Cell assignment uses the ORIGINAL embedding
-    * either way. */
-  private def assignEncodeWrite(emb: DataFrame, cent: DataFrame,
-                                cb: Array[Double], rot: Option[Array[Double]],
-                                path: String, mode: SaveMode,
-                                dataDir: String = "data"): Unit = {
-    val coding = rot.map(r => VectorOps.rotateMat(col("embedding"), r))
-      .getOrElse(col("embedding"))
-    IvfIndex.assignCells(emb, cent)
-      .select(col("vec_id"),
-        VectorOps.pqEncode(coding, cb, PqQueries.M, PqQueries.K).as("codes"),
-        col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$path/$dataDir")
-  }
-
-  private def writeCodebook(spark: SparkSession, cb: Array[Double], path: String): Unit = {
-    import spark.implicits._
-    cb.toSeq.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("idx", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-  }
-
-  private def writeRotation(spark: SparkSession, rot: Array[Double], path: String): Unit = {
-    import spark.implicits._
-    rot.toSeq.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("idx", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
-  }
+    IvfLayout.probedCells(spark, path, query, nprobe)
 
   /** The frozen OPQ rotation sidecar; None for a plain-PQ index (the
     * presence of `rotation/` IS the format flag — old indexes read
     * unchanged). */
-  def readRotation(spark: SparkSession, path: String): Option[Array[Double]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/rotation")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    Some(spark.read.parquet(s"$path/rotation")
-      .orderBy(col("idx")).collect().map(_.getDouble(1))) // dim^2 rows — sidecar-sized
-  }
+  def readRotation(spark: SparkSession, path: String): Option[Array[Double]] =
+    Option.when(IvfLayout.has(spark, path, "rotation"))(IvfLayout.readVector(spark, path, "rotation"))
 
   /** The flat codebook sidecar (public: streaming maintenance loads it
     * once per stream instead of once per micro-batch). */
-  def readCodebook(spark: SparkSession, path: String): Array[Double] = {
-    val rows = spark.read.parquet(s"$path/codebook")
-      .orderBy(col("idx")).collect() // M*K*subdim rows — sidecar-sized
-    rows.map(_.getDouble(1))
-  }
+  def readCodebook(spark: SparkSession, path: String): Array[Double] =
+    IvfLayout.readVector(spark, path, "codebook")
 }

@@ -18,14 +18,7 @@ final class LocalIndex(blocks: Array[VectorBlock], val dim: Int) {
 
   val count: Int = blocks.map(_.n).sum
 
-  private val engine = {
-    val p = new Packer(Array(count.toLong), dim)
-    blocks.foreach { b =>
-      var r = 0
-      while (r < b.n) { p.add(0, b.ids(r), b.data, r * dim); r += 1 }
-    }
-    ServingEngine.flat(p.ids, p.int8Codec)
-  }
+  private val engine = ServingEngine.flatInt8(blocks, dim, ServingEngine.width(count))
 
   def search(q: Array[Byte], k: Int): Seq[(Long, Double)] = {
     require(q.length == dim, s"query dimension ${q.length} != $dim")
@@ -194,18 +187,15 @@ object LocalIvfPqIndex {
     * a rotated index. */
   def fromAtRest(spark: SparkSession, path: String, emb: DataFrame,
       maxLocalBytes: Long = QuantizedIndex.DefaultMaxLocalBytes): LocalIvfPqIndex = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/rotation")),
+    require(!IvfLayout.has(spark, path, "rotation"),
       "fromAtRest: OPQ-rotated layout — the replica scans original-space " +
         "LUTs; use IvfPqIndex.probe (distributed) for rotated indexes")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/residual")),
+    require(!IvfPqIndex.isResidual(spark, path),
       "fromAtRest: residual-coded layout — ADC needs per-cell q·c " +
         "constants; use IvfPqIndex.probe (distributed)")
     val m = graft.ops.PqQueries.M
     val kSub = graft.ops.PqQueries.K
-    val cb = spark.read.parquet(s"$path/codebook")
-      .orderBy("idx").collect().map(_.getDouble(1))
+    val cb = IvfPqIndex.readCodebook(spark, path)
     val (cents, p) = ServingEngine.loadAtRest(spark, path, emb, "codes", m, false,
       "IvfPqIndex", maxLocalBytes) { (p, slot, r) =>
       val pc = r.getAs[Array[Byte]](3)

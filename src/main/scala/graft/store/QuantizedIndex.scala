@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.functions.{SimdSupport, TopKBuffer, VectorKernels}
+import graft.functions.{TopKBuffer, VectorKernels}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,35 +11,23 @@ import org.apache.spark.storage.StorageLevel
   * (pythonvectordb.py:225): ids positional, data row-major n x dim.
   *
   * `data` is the canonical int8 payload (1 B/component on the wire and in
-  * any cache serialization); `dataShort`/`rowNorms` are per-JVM lazy
-  * derivations for the SIMD scan kernel, computed once per cached block. */
+  * any cache serialization); `engine` is the per-JVM lazy one-unit flat
+  * [[ServingEngine]] a task scans the block with, built once per cached
+  * block. */
 final case class VectorBlock(ids: Array[Long], data: Array[Byte], dim: Int) {
   def n: Int = ids.length
 
-  @transient lazy val dataShort: Array[Short] = {
-    val out = new Array[Short](data.length)
-    var i = 0
-    while (i < data.length) { out(i) = data(i).toShort; i += 1 }
-    out
-  }
-
-  @transient lazy val rowNorms: Array[Long] = {
-    val norms = new Array[Long](n)
-    var r = 0
-    while (r < n) {
-      var s = 0L; var j = r * dim; val end = j + dim
-      while (j < end) { val x = data(j).toLong; s += x * x; j += 1 }
-      norms(r) = s; r += 1
-    }
-    norms
-  }
+  // one scan unit: a task's search runs on the task thread and never takes
+  // the process-wide scan gang
+  @transient private[store] lazy val engine: ServingEngine[Int8Query] =
+    ServingEngine.flatInt8(Array(this), dim, chunks = 1)
 }
 
 /** In-memory serving index for batch kNN: corpus packed into per-partition
-  * int8 blocks and persisted; a search is ONE job — each task streams its
-  * block through the SIMD dot-product kernel (SimdKernels) keeping a
-  * bounded top-k heap per query, and the driver merges parts x k candidates
-  * per query.
+  * int8 blocks and persisted; a search is ONE job — each task asks its
+  * block's engine for every query's top-k, and the driver merges parts x k
+  * candidates per query (REPOSE's partition -> local index -> global
+  * top-k merge).
   *
   * Scale: blocks partition horizontally (any number of executors); queries
   * broadcast (m x dim bytes); per-search traffic = parts x m x k triples.
@@ -57,23 +45,8 @@ final class QuantizedIndex private (
     val sc = blocks.sparkContext
     val qb = sc.broadcast(queries)
     val partial: Array[Array[TopKBuffer]] = blocks.map { blk =>
-      val qs = qb.value
-      val data = blk.dataShort
-      val norms = blk.rowNorms
-      val bufs = new Array[TopKBuffer](qs.length)
-      var qi = 0
-      while (qi < qs.length) {
-        val q = qs(qi)._2
-        val qShort = new Array[Short](q.length)
-        var i = 0
-        while (i < q.length) { qShort(i) = q(i).toShort; i += 1 }
-        val buf = new TopKBuffer(k)
-        SimdSupport.scan(data, norms, blk.ids, 0, blk.n, blk.dim,
-          qShort, VectorKernels.normSqInt8(q), buf)
-        bufs(qi) = buf
-        qi += 1
-      }
-      bufs
+      val e = blk.engine
+      qb.value.map(q => e.top(e.allUnits, new Int8Query(q._2), null, k, 0))
     }.collect()
     // Release executor-side broadcast blocks WITHOUT blocking: destroy()
     // waits on a driver RPC round-trip per call, which throttled the batch
@@ -114,16 +87,17 @@ final class QuantizedIndex private (
     * pointing this at a cluster-sized corpus — misuse fails fast with the
     * distributed `search` named as the alternative. The peak is the
     * MATERIALIZED replica, not the packed payload: while building, the
-    * collected byte blocks (dim+8 B/vector) coexist with the repacked
-    * short[] data (2*dim), ids (8) and rowNorms (8) — ~3x the payload
-    * estimate; the guard accounts for all of it. Computing the estimate
-    * runs one Spark job over the blocks. */
+    * collected byte blocks (dim+8 B/vector) coexist with the engine's
+    * packed layout — int8 codes widened to shorts (2*dim), ids (8) and
+    * squared norms (8) — ~3x the payload estimate; the guard accounts for
+    * all of it. Computing the estimate runs one Spark job over the
+    * blocks. */
   def toLocal: LocalIndex = toLocal(QuantizedIndex.DefaultMaxLocalBytes)
 
   def toLocal(maxLocalBytes: Long): LocalIndex = {
     val n = blocks.map(_.n.toLong).sum().toLong
     // peak during LocalIndex construction: collected blocks (dim+8)
-    // + short[] data (2*dim) + ids (8) + rowNorms (8) per vector
+    // + the packed layout's shorts (2*dim), ids (8) and norms (8) per vector
     val peak = n * (3L * dim + 24L)
     require(peak <= maxLocalBytes,
       s"toLocal refused: materializing this corpus needs ~$peak bytes of " +

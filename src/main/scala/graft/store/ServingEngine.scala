@@ -45,18 +45,19 @@ private[store] final class ServingEngine[Q](
     * rank, deterministic unit-id tie-break). An int8 query routes through
     * its exact float image, so int8 and float queries share this. */
   def route(q: Array[Float], nprobe: Int): Array[Int] = {
-    val scores = new Array[Double](numUnits)
+    if (nprobe <= 0) return Array.emptyIntArray
+    // TopKBuffer's (score DESC, id ASC) order is the unit-id tie-break
+    val top = new TopKBuffer(math.min(nprobe, numUnits))
     var c = 0
     while (c < numUnits) {
       val cent = unitCentroids(c)
       var s = 0.0
       var i = 0
       while (i < cent.length) { s += q(i).toDouble * cent(i); i += 1 }
-      scores(c) = s
+      top.insert(s, c)
       c += 1
     }
-    val order = (0 until numUnits).sortBy(c => (-scores(c), c))
-    order.take(math.min(nprobe, numUnits)).toArray
+    Array.tabulate(top.size)(j => top.ids(j).toInt)
   }
 
   /** Rows a search over `units` scans (the measured scan fraction). */
@@ -73,7 +74,12 @@ private[store] final class ServingEngine[Q](
 
   /** Scan `units` with the codec and, when the engine rescores, re-rank
     * its top `candK` candidates exactly on `q8`. */
-  def search(units: Array[Int], q: Q, q8: Int8Query, topK: Int, candK: Int): Seq[(Long, Double)] = {
+  def search(units: Array[Int], q: Q, q8: Int8Query, topK: Int, candK: Int): Seq[(Long, Double)] =
+    ServingEngine.result(top(units, q, q8, topK, candK))
+
+  /** [[search]]'s merged top-`topK` buffer. One unit, or too few rows for
+    * fan-out, scans on the calling thread and never takes the gang. */
+  def top(units: Array[Int], q: Q, q8: Int8Query, topK: Int, candK: Int): TopKBuffer = {
     val parts = math.min(width, units.length)
     val gangOuts = new Array[TopKBuffer](parts)
     val outs =
@@ -87,7 +93,7 @@ private[store] final class ServingEngine[Q](
       }
     val merged = new TopKBuffer(topK)
     outs.foreach(merged.mergeFrom)
-    ServingEngine.result(merged)
+    merged
   }
 
   /** One participant's share of a search over `outs.length` participants;
@@ -175,11 +181,24 @@ private[store] object ServingEngine {
 
   /** Flat router: one row chunk per gang participant the corpus can keep
     * busy. */
-  def flat[Q](ids: Array[Long], codec: ScanCodec[Q]): ServingEngine[Q] = {
+  def flat[Q](ids: Array[Long], codec: ScanCodec[Q]): ServingEngine[Q] = flat(ids, codec, width(ids.length))
+
+  /** Flat router over `chunks` row chunks; one chunk always scans on the
+    * calling thread. */
+  def flat[Q](ids: Array[Long], codec: ScanCodec[Q], chunks: Int): ServingEngine[Q] = {
     val n = ids.length
-    val chunks = width(n)
     val per = (n + chunks - 1) / chunks
     new ServingEngine(null, Array.tabulate(chunks + 1)(c => math.min(n, c * per)), ids, codec, null)
+  }
+
+  /** Flat exact int8 engine over the blocks' rows, in block order. */
+  def flatInt8(blocks: Array[VectorBlock], dim: Int, chunks: Int): ServingEngine[Int8Query] = {
+    val p = new Packer(Array(blocks.map(_.n.toLong).sum), dim)
+    blocks.foreach { b =>
+      var r = 0
+      while (r < b.n) { p.add(0, b.ids(r), b.data, r * dim); r += 1 }
+    }
+    flat(p.ids, p.int8Codec, chunks)
   }
 
   /** IVF router over a cell-major [[Packer]] layout. */

@@ -218,6 +218,11 @@ class LocalIvfQuantSpec extends SparkSpec {
     IvfPqIndex.buildOpq(emb, dirOpq)
     intercept[IllegalArgumentException](
       LocalIvfPqIndex.fromAtRest(spark, dirOpq, emb))
+    // and so is a residual-coded layout
+    val dirRes = java.nio.file.Files.createTempDirectory("ivfpq-local-res").toString
+    IvfPqIndex.buildResidual(emb, dirRes)
+    intercept[IllegalArgumentException](
+      LocalIvfPqIndex.fromAtRest(spark, dirRes, emb))
   }
 
   test("fromAtRest replica serves an at-rest IvfBq layout on its frozen sidecars") {
