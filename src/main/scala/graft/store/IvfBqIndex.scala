@@ -44,7 +44,7 @@ object IvfBqIndex {
     * contract). No quantizer to load: sign codes are training-free. */
   def append(emb: DataFrame, path: String): Unit = {
     if (emb.isEmpty) return
-    append(emb, path, emb.sparkSession.read.parquet(s"$path/centroids"))
+    append(emb, path, IvfLayout.centroids(emb.sparkSession, path))
   }
 
   /** As append with the frozen centroids already loaded (the

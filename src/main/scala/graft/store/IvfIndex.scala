@@ -39,7 +39,7 @@ object IvfIndex {
     * accumulates. Caller appends NEW vec_ids; ids are not deduplicated. */
   def append(emb: DataFrame, path: String): Unit = {
     if (emb.isEmpty) return
-    val cent = emb.sparkSession.read.parquet(s"$path/centroids")
+    val cent = IvfLayout.centroids(emb.sparkSession, path)
     IvfLayout.writeCells(IvfLayout.assignCells(emb, cent), raw.code, path, SaveMode.Append)
   }
 

@@ -180,11 +180,23 @@ private[graft] object IvfLayout {
   private def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The `centroids/` sidecar: (cell, centroid) rows, num_cells of them. */
+  def centroids(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/centroids")
+
+  /** The sidecar's rows collected, sorted by cell (sidecar-sized by
+    * construction). */
+  def readCentroids(spark: SparkSession, path: String): Array[(Int, Array[Double])] =
+    centroids(spark, path)
+      .select(col("cell"), col("centroid").cast("array<double>"))
+      .collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+
   /** The query's top-`nprobe` cells by centroid cosine (the sidecar is
     * num_cells rows — tiny by construction). */
   def probedCells(spark: SparkSession, path: String, query: Array[Float],
       nprobe: Int): Seq[Int] =
-    spark.read.parquet(s"$path/centroids")
+    centroids(spark, path)
       .select(col("cell"),
         VectorOps.cosineFloat(typedLit(query), col("centroid").cast("array<float>")).as("cs"))
       .orderBy(col("cs").desc, col("cell"))

@@ -109,7 +109,7 @@ object IvfPqIndex {
     if (emb.isEmpty) return
     val spark = emb.sparkSession
     append(emb, path,
-      spark.read.parquet(s"$path/centroids"), readCodebook(spark, path))
+      IvfLayout.centroids(spark, path), readCodebook(spark, path))
   }
 
   /** As append, with the frozen sidecars already loaded — the streaming
@@ -156,14 +156,13 @@ object IvfPqIndex {
         // residual decomposition q·x ~= q·c(cell) + ADC: the per-cell
         // constant is nprobe dot products against the sidecar (driver
         // math on a bounded relation), folded in as a when-chain
-        val consts = spark.read.parquet(s"$path/centroids")
-          .filter(col("cell").isin(cells: _*)).collect()
-          .map { r =>
-            val c = r.getSeq[Double](1)
+        val consts = IvfLayout.readCentroids(spark, path)
+          .filter { case (cell, _) => cells.contains(cell) }
+          .map { case (cell, c) =>
             var dot = 0.0
             var i = 0
             while (i < query.length) { dot += query(i).toDouble * c(i); i += 1 }
-            r.getInt(0) -> dot
+            cell -> dot
           }
         consts.foldLeft(lit(0.0)) { case (acc, (cell, qc)) =>
           when(col("cell") === cell, qc).otherwise(acc)

@@ -88,17 +88,16 @@ final class QuantizedIndex private (
     * distributed `search` named as the alternative. The peak is the
     * MATERIALIZED replica, not the packed payload: while building, the
     * collected byte blocks (dim+8 B/vector) coexist with the engine's
-    * packed layout — int8 codes widened to shorts (2*dim), ids (8) and
-    * squared norms (8) — ~3x the payload estimate; the guard accounts for
-    * all of it. Computing the estimate runs one Spark job over the
-    * blocks. */
+    * packed layout — int8 codes (dim), ids (8) and squared norms (8) —
+    * ~2x the payload estimate; the guard accounts for all of it.
+    * Computing the estimate runs one Spark job over the blocks. */
   def toLocal: LocalIndex = toLocal(QuantizedIndex.DefaultMaxLocalBytes)
 
   def toLocal(maxLocalBytes: Long): LocalIndex = {
     val n = blocks.map(_.n.toLong).sum().toLong
-    // peak during LocalIndex construction: collected blocks (dim+8)
-    // + the packed layout's shorts (2*dim), ids (8) and norms (8) per vector
-    val peak = n * (3L * dim + 24L)
+    // peak during LocalIndex construction: the packed layout plus the
+    // collected blocks (dim+8 per vector)
+    val peak = n * (Packer.bytesPerRow(dim) + dim + 8L)
     require(peak <= maxLocalBytes,
       s"toLocal refused: materializing this corpus needs ~$peak bytes of " +
         s"driver heap at peak (> limit $maxLocalBytes). Use the " +

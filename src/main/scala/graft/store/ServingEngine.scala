@@ -310,10 +310,9 @@ private[store] object ServingEngine {
   def loadAtRest(spark: SparkSession, path: String, emb: DataFrame, codeCol: String,
       pqM: Int, bq: Boolean, distributed: String, maxLocalBytes: Long)(
       encode: (Packer, Int, Row) => Unit): (Array[Array[Float]], Packer) = {
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid").cast("array<float>"))
-      .collect() // numCells rows — sidecar-sized by construction
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
+    // the float image of the saved doubles (Java's (float), as Spark's
+    // double -> float cast)
+    val centRows = IvfLayout.readCentroids(spark, path).map { case (c, v) => c -> v.map(_.toFloat) }
     require(centRows.nonEmpty, s"fromAtRest: no centroids under $path")
     // cells are hive-partition values; remap (possibly sparse) ids to a
     // dense [0, numCells) routing index
@@ -326,9 +325,9 @@ private[store] object ServingEngine {
     // guard BEFORE any Int conversion: a count past 2^31 would wrap
     val n = counts.sum
     require(n <= Int.MaxValue, s"fromAtRest: corpus too large ($n rows)")
-    // replica peak: short data (2*dim) + ids (8) + norms (8) + scan codes
-    // per vector, plus the streamed rows (~5*dim + object overhead)
-    val peak = n * (pqM + (if (bq) 8L * ((dim + 63) / 64) else 0L) + 7L * dim + 96L)
+    // replica peak: the packed layout plus the streamed rows (~5*dim +
+    // object overhead per vector)
+    val peak = n * (Packer.bytesPerRow(dim, pqM, bq) + 5L * dim + 80L)
     require(peak <= maxLocalBytes,
       s"fromAtRest refused: materializing this corpus needs ~$peak bytes " +
         s"of driver heap at peak (> limit $maxLocalBytes). Use $distributed" +
@@ -356,14 +355,14 @@ private[store] object ServingEngine {
 
 /** A cell-major flat layout being filled row by row: cell c's rows land at
   * [cellStart(c), cellStart(c+1)) in arrival order, each with its id, its
-  * int8 code (as shorts, for the SIMD kernel) and squared norm, and room
+  * int8 code (the bytes the SIMD kernel scans) and squared norm, and room
   * for `pqM` PQ code bytes and, when `signs`, the dim's sign-bit words. */
 private[store] final class Packer(counts: Array[Long], dim: Int, pqM: Int = 0, signs: Boolean = false) {
-  val bqWords: Int = if (signs) (dim + 63) / 64 else 0
+  val bqWords: Int = Packer.bqWords(dim, signs)
   val cellStart: Array[Int] = counts.scanLeft(0L)(_ + _).map(_.toInt)
   private val n = cellStart.last
   val ids = new Array[Long](n)
-  val int8 = new Array[Short](n * dim)
+  val int8 = new Array[Byte](n * dim)
   val norms = new Array[Long](n)
   val pq = new Array[Byte](n * pqM)
   val bq = new Array[Long](n * bqWords)
@@ -377,12 +376,11 @@ private[store] final class Packer(counts: Array[Long], dim: Int, pqM: Int = 0, s
     require(slot < cellStart(cell + 1), s"more rows in cell $cell than counted")
     fill(cell) = slot + 1
     ids(slot) = id
-    val base = slot * dim
+    System.arraycopy(code, off, int8, slot * dim, dim)
     var j = 0
     var nn = 0L
     while (j < dim) {
       val x = code(off + j)
-      int8(base + j) = x.toShort
       nn += x.toLong * x
       j += 1
     }
@@ -392,6 +390,16 @@ private[store] final class Packer(counts: Array[Long], dim: Int, pqM: Int = 0, s
   }
 
   def int8Codec: Int8Codec = new Int8Codec(int8, norms, dim)
+}
+
+private[store] object Packer {
+  def bqWords(dim: Int, signs: Boolean): Int = if (signs) (dim + 63) / 64 else 0
+
+  /** Heap bytes per row of the packed layout: id (8), int8 code (dim),
+    * squared norm (8), PQ code (pqM) and sign words (8 each). The driver
+    * guards of the in-process replicas add their own transient part to it. */
+  def bytesPerRow(dim: Int, pqM: Int = 0, signs: Boolean = false): Long =
+    8L + dim + 8L + pqM + 8L * bqWords(dim, signs)
 }
 
 /** Scores a row range [lo, hi) of the flat layout for one prepared query. */
@@ -405,15 +413,15 @@ private[store] abstract class ScanCodec[Q] {
     throw new UnsupportedOperationException(s"${getClass.getSimpleName} scores are exact")
 }
 
-/** An int8 query prepared for the SIMD kernel. */
+/** An int8 query prepared for the SIMD kernel: widened once to shorts. */
 private[store] final class Int8Query(q: Array[Byte]) {
   val shorts: Array[Short] = q.map(_.toShort)
   val normSq: Long = VectorKernels.normSqInt8(q)
 }
 
-/** Exact int8 cosine: the SIMD kernel over packed shorts, bitwise equal to
-  * the declarative cosine_int8 path. */
-private[store] final class Int8Codec(data: Array[Short], norms: Array[Long], dim: Int)
+/** Exact int8 cosine: the SIMD kernel over the packed int8 rows, bitwise
+  * equal to the declarative cosine_int8 path. */
+private[store] final class Int8Codec(data: Array[Byte], norms: Array[Long], dim: Int)
     extends ScanCodec[Int8Query] {
   def top(q: Int8Query, lo: Int, hi: Int, ids: Array[Long], buf: TopKBuffer): Unit =
     SimdSupport.scan(data, norms, ids, lo, hi, dim, q.shorts, q.normSq, buf)

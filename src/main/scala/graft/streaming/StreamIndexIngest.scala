@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.store.IvfPqIndex
+import graft.store.{IvfLayout, IvfPqIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -32,7 +32,7 @@ object StreamIndexIngest {
     * stream-execution thread, the caller reads after stop()). */
   def ingestOnce(stream: DataFrame, path: String): Long = {
     val spark = stream.sparkSession
-    val cent = spark.read.parquet(s"$path/centroids").localCheckpoint(true)
+    val cent = IvfLayout.centroids(spark, path).localCheckpoint(true)
     val cb = IvfPqIndex.readCodebook(spark, path)
     val rot = IvfPqIndex.readRotation(spark, path)
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
@@ -56,7 +56,7 @@ object StreamIndexIngest {
     * build and the feed. */
   def ingestOnceBq(stream: DataFrame, path: String): Long = {
     val spark = stream.sparkSession
-    val cent = spark.read.parquet(s"$path/centroids").localCheckpoint(true)
+    val cent = IvfLayout.centroids(spark, path).localCheckpoint(true)
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val q = stream.writeStream
       .outputMode("append")

@@ -111,10 +111,18 @@ class KernelPropertiesSpec extends AnyFunSuite {
       val b = new TopKBuffer(k)
       graft.functions.SimdKernels.scanTopK(data, norms, ids, 0, n, dim, q, nq, a)
       SimdSupport.scanTopKScalar(data, norms, ids, 0, n, dim, q, nq, b)
-      a.size == b.size && (0 until a.size).forall { j =>
-        a.ids(j) == b.ids(j) &&
-          java.lang.Double.doubleToLongBits(a.scores(j)) ==
-            java.lang.Double.doubleToLongBits(b.scores(j))
+      // the same rows as int8 bytes: SIMD and scalar byte scans
+      val bytes = data.map(_.toByte)
+      val c = new TopKBuffer(k)
+      val d = new TopKBuffer(k)
+      graft.functions.SimdKernels.scanTopK(bytes, norms, ids, 0, n, dim, q, nq, c)
+      SimdSupport.scanTopKScalar(bytes, norms, ids, 0, n, dim, q, nq, d)
+      Seq(a, c, d).forall { x =>
+        x.size == b.size && (0 until x.size).forall { j =>
+          x.ids(j) == b.ids(j) &&
+            java.lang.Double.doubleToLongBits(x.scores(j)) ==
+              java.lang.Double.doubleToLongBits(b.scores(j))
+        }
       }
     })
   }

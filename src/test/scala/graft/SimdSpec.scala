@@ -34,11 +34,19 @@ class SimdSpec extends SparkSpec {
       val b = new TopKBuffer(13)
       SimdKernels.scanTopK(data, norms, ids, 0, n, dim, q, nq, a)
       SimdSupport.scanTopKScalar(data, norms, ids, 0, n, dim, q, nq, b)
-      assert(a.size == b.size)
-      (0 until a.size).foreach { j =>
-        assert(a.ids(j) == b.ids(j))
-        assert(java.lang.Double.doubleToLongBits(a.scores(j)) ==
-          java.lang.Double.doubleToLongBits(b.scores(j)), s"dim=$dim row ${a.ids(j)}")
+      // the same rows as int8 bytes: SIMD and scalar byte scans
+      val bytes = data.map(_.toByte)
+      val c = new TopKBuffer(13)
+      val d = new TopKBuffer(13)
+      SimdKernels.scanTopK(bytes, norms, ids, 0, n, dim, q, nq, c)
+      SimdSupport.scanTopKScalar(bytes, norms, ids, 0, n, dim, q, nq, d)
+      Seq(a, c, d).foreach { x =>
+        assert(x.size == b.size)
+        (0 until x.size).foreach { j =>
+          assert(x.ids(j) == b.ids(j))
+          assert(java.lang.Double.doubleToLongBits(x.scores(j)) ==
+            java.lang.Double.doubleToLongBits(b.scores(j)), s"dim=$dim row ${x.ids(j)}")
+        }
       }
     }
   }
