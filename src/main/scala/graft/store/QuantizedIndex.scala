@@ -13,14 +13,17 @@ import org.apache.spark.storage.StorageLevel
   * `data` is the canonical int8 payload (1 B/component on the wire and in
   * any cache serialization); `engine` is the per-JVM lazy one-unit flat
   * [[ServingEngine]] a task scans the block with, built once per cached
-  * block. */
+  * block over `ids` and `data` themselves (it adds only the rows' squared
+  * norms, 8 B/row). */
 final case class VectorBlock(ids: Array[Long], data: Array[Byte], dim: Int) {
   def n: Int = ids.length
 
   // one scan unit: a task's search runs on the task thread and never takes
   // the process-wide scan gang
-  @transient private[store] lazy val engine: ServingEngine[Int8Query] =
-    ServingEngine.flatInt8(Array(this), dim, chunks = 1)
+  @transient private[store] lazy val engine: ServingEngine[Int8Query] = {
+    val norms = Array.tabulate(n)(r => Int8Codec.normSq(data, r * dim, dim))
+    ServingEngine.flat(ids, new Int8Codec(data, norms, dim), chunks = 1)
+  }
 }
 
 /** In-memory serving index for batch kNN: corpus packed into per-partition

@@ -191,7 +191,9 @@ private[store] object ServingEngine {
     new ServingEngine(null, Array.tabulate(chunks + 1)(c => math.min(n, c * per)), ids, codec, null)
   }
 
-  /** Flat exact int8 engine over the blocks' rows, in block order. */
+  /** Flat exact int8 engine over one packed copy of the blocks' rows, in
+    * block order (the in-process replica; a single block's own engine
+    * scans its arrays in place, see [[VectorBlock]]). */
   def flatInt8(blocks: Array[VectorBlock], dim: Int, chunks: Int): ServingEngine[Int8Query] = {
     val p = new Packer(Array(blocks.map(_.n.toLong).sum), dim)
     blocks.foreach { b =>
@@ -377,14 +379,7 @@ private[store] final class Packer(counts: Array[Long], dim: Int, pqM: Int = 0, s
     fill(cell) = slot + 1
     ids(slot) = id
     System.arraycopy(code, off, int8, slot * dim, dim)
-    var j = 0
-    var nn = 0L
-    while (j < dim) {
-      val x = code(off + j)
-      nn += x.toLong * x
-      j += 1
-    }
-    norms(slot) = nn
+    norms(slot) = Int8Codec.normSq(code, off, dim)
     filled += 1
     slot
   }
@@ -425,6 +420,20 @@ private[store] final class Int8Codec(data: Array[Byte], norms: Array[Long], dim:
     extends ScanCodec[Int8Query] {
   def top(q: Int8Query, lo: Int, hi: Int, ids: Array[Long], buf: TopKBuffer): Unit =
     SimdSupport.scan(data, norms, ids, lo, hi, dim, q.shorts, q.normSq, buf)
+}
+
+private[store] object Int8Codec {
+  /** Exact squared norm of the int8 row code(off until off + dim). */
+  def normSq(code: Array[Byte], off: Int, dim: Int): Long = {
+    var j = 0
+    var nn = 0L
+    while (j < dim) {
+      val x = code(off + j)
+      nn += x.toLong * x
+      j += 1
+    }
+    nn
+  }
 }
 
 /** PQ asymmetric distance: m LUT reads + adds per row over m code bytes

@@ -3,18 +3,21 @@
 
 Runs each checkout's own `enginebench/run.py` from that checkout's root,
 pair by pair, alternating which side goes first (pair 0: base first), with
-seed = first seed + pair index on both sides of a pair. Host steal time is
-read from /proc/stat around each run. The metric list and each metric's
+seed = first seed + pair index on both sides of a pair; run.py takes its run
+length from BENCHMARK.json. Host steal time is read from /proc/stat around
+each run, and quartiles are statistics.quantiles(values, n=4), both as in
+enginebench/steady.py. The metric list and each metric's
 direction come from the BASE checkout's BENCHMARK.json: its end-to-end
 metrics for untraced runs, its per-layer metrics for `--trace 1` runs.
 
 For each metric it prints each side's median and quartiles, the change's
-wins out of the pairs (ties count for neither side), and whether the
-medians differ by more than the base's interquartile range; then
-failed/attempted per side and the steal of every run.
+wins out of all pairs run (ties count for neither side; a pair whose change
+run failed or printed no value counts as a loss), and whether the medians
+differ by more than the base's interquartile range; then failed/attempted
+per side and the steal of every run.
 
     python3 tools/enginebench_ab.py BASE_ROOT CHANGE_ROOT \\
-        --workload serve --pairs 10 --seed 1 [--trace 0] [--out runs.json]
+        --workload serve --pairs 10 --seed 1 [--trace 0]
 
 Standard library only.
 """
@@ -28,21 +31,19 @@ import time
 
 
 def steal_seconds():
-    """Cumulative steal time of the host (all CPUs), in seconds; None when
-    /proc/stat has no steal column."""
+    """Cumulative steal time of the host (all CPUs), in seconds (/proc/stat
+    counts in 1/100 s); None when /proc/stat has no steal column."""
     try:
         with open("/proc/stat") as f:
             fields = f.readline().split()
-        return int(fields[8]) / os.sysconf("SC_CLK_TCK")
+        return int(fields[8]) / 100.0
     except (OSError, IndexError, ValueError):
         return None
 
 
-def run_one(root, workload, seed, trace, seconds):
+def run_one(root, workload, seed, trace):
     cmd = [sys.executable, "enginebench/run.py", "--workload", workload,
            "--seed", str(seed), "--trace", str(trace)]
-    if seconds is not None:
-        cmd += ["--seconds", str(seconds)]
     s0 = steal_seconds()
     t0 = time.time()
     p = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
@@ -66,7 +67,7 @@ def run_one(root, workload, seed, trace, seconds):
 def quartiles(xs):
     if len(xs) == 1:
         return xs[0], xs[0], xs[0]
-    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    q1, med, q3 = statistics.quantiles(xs, n=4)
     return q1, med, q3
 
 
@@ -83,8 +84,6 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--seconds", type=float, default=None, help="passed to run.py when given")
-    ap.add_argument("--out", help="write every run's raw result here (JSON)")
     args = ap.parse_args()
 
     base, change = os.path.abspath(args.base), os.path.abspath(args.change)
@@ -99,17 +98,13 @@ def main():
         if i % 2 == 1:
             order.reverse()
         for side, root in order:
-            r = run_one(root, args.workload, seed, args.trace, args.seconds)
+            r = run_one(root, args.workload, seed, args.trace)
             runs[side].append(r)
             res = r["result"]
             steal = "n/a" if r["steal_s"] is None else "%.2f" % r["steal_s"]
             print("pair %d seed %d %-6s failed %s/%s steal %s s wall %.0f s" % (
                 i, seed, side, res.get("failed"), res.get("attempted"), steal, r["wall_s"]),
                 file=sys.stderr, flush=True)
-
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump({"workload": args.workload, "trace": args.trace, "runs": runs}, f, indent=1)
 
     print("workload %s, %d pairs from seed %d, trace %d" % (args.workload, args.pairs, args.seed, args.trace))
     print("%-32s %-34s %-34s %-7s %s" % ("metric", "base median [q1, q3]", "change median [q1, q3]",
@@ -120,21 +115,23 @@ def main():
         c = [value(r, name) for r in runs["change"]]
         bv = [x for x in b if x is not None]
         cv = [x for x in c if x is not None]
-        if not bv or not cv:
+        if not bv:
             continue
-        wins = pairs = 0
-        for x, y in zip(b, c):
-            if x is None or y is None:
+        wins = 0
+        for x, y, cr in zip(b, c, runs["change"]):
+            if x is None or y is None or not cr["result"].get("correct"):
                 continue
-            pairs += 1
             if (y < x) if lower else (y > x):
                 wins += 1
         bq1, bmed, bq3 = quartiles(bv)
-        cq1, cmed, cq3 = quartiles(cv)
-        beyond = abs(cmed - bmed) > (bq3 - bq1)
+        if cv:
+            cq1, cmed, cq3 = quartiles(cv)
+            change = "%.4g [%.4g, %.4g]" % (cmed, cq1, cq3)
+            beyond = "yes" if abs(cmed - bmed) > (bq3 - bq1) else "no"
+        else:
+            change, beyond = "n/a", "n/a"
         print("%-32s %-34s %-34s %-7s %s" % (
-            name, "%.4g [%.4g, %.4g]" % (bmed, bq1, bq3), "%.4g [%.4g, %.4g]" % (cmed, cq1, cq3),
-            "%d/%d" % (wins, pairs), "yes" if beyond else "no"))
+            name, "%.4g [%.4g, %.4g]" % (bmed, bq1, bq3), change, "%d/%d" % (wins, args.pairs), beyond))
     for side in ("base", "change"):
         failed = sum(r["result"].get("failed", 0) or 0 for r in runs[side])
         attempted = sum(r["result"].get("attempted", 0) or 0 for r in runs[side])
