@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.functions.{VectorKernels, VectorOps}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,43 +18,69 @@ import org.apache.spark.sql.types._
   *    comes free from Catalyst predicate pushdown; top-k plans as
   *    TakeOrderedAndProject
   *  - T5 get_vector       -> `getVector` (dequantized read)
-  *  - T6/T7 delete+compact-> `delete` records tombstones (anti-join view);
-  *    `compact()` folds them into the base frame — the *intended* semantics
-  *    (ids stay aligned), not the reference's positional-shift bug
+  *  - T6/T7 delete+compact-> `delete` adds the ids it hits to a driver-held
+  *    tombstone set that every read filters out; `compact()` drops the
+  *    tombstoned rows from the base frame — the *intended* semantics (ids
+  *    stay aligned), not the reference's positional-shift bug
   *  - T8 stats            -> `stats`
   *  - T9/T10 save/load    -> parquet + sidecar schema/invariant assertions
   *  - T11 count           -> `count`
   *
-  * Scale: rows live in a DataFrame partitioned by storage; all operators are
-  * narrow projections or key joins (anti-join for tombstones, broadcast for
-  * query rows), so the store inherits Spark's horizontal scaling; `compact`
-  * is the periodic rewrite job (Delta-style) that keeps the anti-join small.
+  * State: one materialised base frame ⊕ at most one materialised delta
+  * (the rows added since the last fold, coalesced to `defaultParallelism`
+  * partitions) − the tombstone id set — Krypton's write buffer in front of
+  * a materialised base. Every add re-materialises the delta with its batch;
+  * once the delta holds at least as many rows as the base it folds into the
+  * base (a doubling rule, so a row is rewritten into the base O(log n)
+  * times), and `compact()` always folds it. Deletes below
+  * `DeletedThreshold` only grow the tombstone set. So the plan a read runs
+  * has the same shape after any number of mutations — a scan of the base, a
+  * scan of the delta and, while deletes are pending, one set-membership
+  * filter — and a search is one Spark job.
+  *
+  * Scale: rows live in DataFrames partitioned by storage and all operators
+  * are narrow scans, filters and projections (the add's duplicate checks —
+  * a distinct count over the batch, a join against the batch — are the
+  * only key operations), so the store inherits Spark's
+  * horizontal scaling; the tombstone set stays under `DeletedThreshold` ids
+  * on the driver, and `compact` is the periodic rewrite job (Delta-style)
+  * that empties it.
   */
 final class VectorStore private (
     val spark: SparkSession,
     val dim: Int,
     private var base: DataFrame,
-    private var tombstones: DataFrame,
-    private var deletedCount: Long) {
+    private var baseRows: Long) {
 
   import VectorStore._
 
+  // rows added since the last fold (an empty frame when none are), and the
+  // ids deleted since the last compaction. Each tombstoned id names exactly
+  // one row of base ∪ delta, so the live count is
+  // baseRows + deltaRows − tombs.size.
+  private var delta: DataFrame = emptyFrame(spark)
+  private var deltaRows = 0L
+  private var tombs = Set.empty[String]
+
   /** Active (non-deleted) rows: (id string, embedding array<float>,
-    * qvec binary, meta map<string,string>).
+    * qvec binary, meta map<string,string>) — base ∪ delta without the
+    * tombstoned ids. The tombstone filter plans as one `InSet` over a
+    * driver-built set, so no join, no `distinct` and no extra job.
     *
     * Thread-safety mirrors the reference's RLock (pythonvectordb.py:233,
     * held at :299/:362/:414/:439/:519/:566): every mutation runs under
     * the store monitor, and reads assemble their plan from a CONSISTENT
-    * snapshot of (base, tombstones, deletedCount) under the same monitor.
+    * snapshot of (base, delta, tombstones) under the same monitor.
     * Unlike the reference, reads release the lock BEFORE executing the
     * Spark job — distributed searches from concurrent callers proceed in
     * parallel; only the var snapshot is serialized. */
   def active: DataFrame = synchronized {
-    if (deletedCount == 0) base
-    else base.join(broadcast(tombstones), Seq("id"), "left_anti")
+    val all = base.unionByName(delta)
+    if (tombs.isEmpty) all else all.filter(!col("id").isInCollection(tombs))
   }
 
-  def count: Long = active.count()
+  /** Live rows, from the row counts the mutations keep (no Spark job). */
+  def count: Long = synchronized(baseRows + deltaRows - tombs.size)
 
   // monotonic auto-id offset: NOT decremented on delete (matches the
   // reference's vector_count-based `vec_{start+i}` naming which also never
@@ -63,9 +89,12 @@ final class VectorStore private (
   private var nextAutoId: Long = 0L
 
   /** Bulk insert with the reference's five validations
-    * (pythonvectordb.py:279-303). `rows` needs columns
-    * (id: string | null, embedding: array<float>, meta: map<string,string>);
-    * null ids are auto-generated as `vec_{offset+row_number}`.
+    * (pythonvectordb.py:279-303). `rows` needs an `embedding` column
+    * (array<float>, or any numeric array: it is cast to float first, and
+    * the finiteness check reads the cast values, as the reference casts to
+    * float32 before `isfinite`) and may carry `id` (string) and `meta`
+    * (map<string,string>). Without an `id` column ids are auto-generated
+    * as `vec_{offset+row_number}`; a null id is rejected.
     * Re-adding a previously deleted id is allowed (the reference's delete
     * fully removes the id, pythonvectordb.py:449-455): the tombstone is
     * retired and the old row is physically dropped first. */
@@ -82,61 +111,88 @@ final class VectorStore private (
             concat(lit("vec_"), (col("__row_idx") + nextAutoId).cast("string")))
           .drop("__row_idx")
       else rows
-    val withMeta0 =
+    val withMeta =
       if (!cols.contains("meta"))
         withId.withColumn("meta",
           map().cast(MapType(StringType, StringType)))
       else withId
-    // materialize once: the validation aggregate, the dup join, and the
-    // final insert all reuse these blocks instead of recomputing the input
-    // plan (and its auto-id window) per validation.
-    val withMeta = withMeta0.localCheckpoint(true)
-
-    // one aggregate job for the three row-local validations
-    // (pythonvectordb.py:279-297)
-    val v = withMeta.agg(
-      org.apache.spark.sql.functions.count(lit(1)).as("n"),
-      // null embeddings must count as invalid: size(null)/hasNonFinite(null)
-      // evaluate to null, and when(null).otherwise(0) would score them valid
-      sum(when(col("embedding").isNull ||
-        size(col("embedding")) =!= dim, 1).otherwise(0)).as("bad_dim"),
-      sum(when(coalesce(VectorOps.hasNonFinite(col("embedding")), lit(false)), 1)
-        .otherwise(0)).as("nonfinite"),
-      (org.apache.spark.sql.functions.count(lit(1)) - countDistinct(col("id"))).as("dups")).collect().head
-    if (v.getAs[Long]("bad_dim") > 0)
-      throw new IllegalArgumentException(
-        s"dimension mismatch: ${v.getAs[Long]("bad_dim")} rows != dim $dim")
-    if (v.getAs[Long]("nonfinite") > 0)
-      throw new IllegalArgumentException(
-        s"non-finite values in ${v.getAs[Long]("nonfinite")} rows")
-    if (v.getAs[Long]("dups") > 0)
-      throw new IllegalArgumentException(
-        s"${v.getAs[Long]("dups")} duplicate ids in batch")
-    // disjoint from existing LIVE rows (pythonvectordb.py:300-303)
-    val dupExisting = withMeta.join(active.select("id"), Seq("id"), "left_semi").count()
-    if (dupExisting > 0)
-      throw new IllegalArgumentException(s"$dupExisting ids already exist")
-
-    // retire tombstones being re-added: drop the dead base rows and their
-    // tombstone entries so the new rows are visible
-    if (deletedCount > 0) {
-      val resurrected = tombstones.join(withMeta.select("id"), Seq("id"), "left_semi")
-      val nRes = resurrected.count()
-      if (nRes > 0) {
-        base = base.join(broadcast(resurrected), Seq("id"), "left_anti")
-        tombstones = tombstones.join(broadcast(resurrected), Seq("id"), "left_anti")
-        deletedCount -= nRes
-      }
+    // materialize once, after the cast and the quantize: the validations,
+    // the duplicate checks and the insert all read these blocks, the same
+    // int8 codes searches score. The row-local validations
+    // (pythonvectordb.py:279-297) and the batch ids that re-add a
+    // tombstoned id (at most tombs.size of them) are observed during the
+    // materializing job, so they cost no job of their own.
+    val emb = col("embedding").cast(ArrayType(FloatType))
+    val checks = new Observation()
+    val prepared = materialize(withMeta.select(
+      col("id").cast(StringType).as("id"),
+      emb.as("embedding"),
+      VectorOps.quantizeInt8(emb).as("qvec"),
+      col("meta").cast(MapType(StringType, StringType)).as("meta"))
+      .observe(checks,
+        org.apache.spark.sql.functions.count(lit(1)).as("n"),
+        // null embeddings must count as invalid: size(null)/hasNonFinite(null)
+        // evaluate to null, and count_if(null) would score them valid
+        count_if(col("embedding").isNull || size(col("embedding")) =!= dim).as("bad_dim"),
+        count_if(coalesce(VectorOps.hasNonFinite(col("embedding")), lit(false))).as("nonfinite"),
+        count_if(col("id").isNull).as("null_ids"),
+        collect_set(when(col("id").isInCollection(tombs), col("id"))).as("resurrect")),
+      defaultParts)
+    val v = checks.get
+    def reject(c: Long, msg: Long => String): Unit =
+      if (c > 0) throw new IllegalArgumentException(msg(c))
+    val n = v("n").asInstanceOf[Long]
+    reject(v("bad_dim").asInstanceOf[Long], c => s"dimension mismatch: $c rows != dim $dim")
+    reject(v("nonfinite").asInstanceOf[Long], c => s"non-finite values in $c rows")
+    reject(v("null_ids").asInstanceOf[Long], c => s"$c rows have a null id")
+    // the distinct count as one RDD job: a distinct aggregate plans as
+    // three adaptive-execution jobs
+    reject(n - prepared.select("id").rdd.map(_.getString(0)).distinct().count(),
+      c => s"$c duplicate ids in batch")
+    // disjoint from existing LIVE rows (pythonvectordb.py:300-303): the
+    // batch is the join's small side, and only matching ids come back
+    if (count > 0) {
+      val dupExisting = active.select("id")
+        .join(prepared.select("id"), Seq("id"), "left_semi").collect().length
+      reject(dupExisting, c => s"$c ids already exist")
     }
 
-    val prepared = withMeta.select(
-      col("id").cast(StringType).as("id"),
-      col("embedding").cast(ArrayType(FloatType)).as("embedding"),
-      VectorOps.quantizeInt8(col("embedding")).as("qvec"),
-      col("meta").cast(MapType(StringType, StringType)).as("meta"))
-    base = base.unionByName(prepared)
-    nextAutoId += v.getAs[Long]("n")
+    val resurrect = v("resurrect").asInstanceOf[scala.collection.Seq[String]].toSet
+    if (resurrect.nonEmpty) {
+      // retire the tombstones being re-added: their dead rows leave base
+      // and delta in the same rewrite that takes in the batch
+      base = materialize(base.unionByName(delta)
+        .filter(!col("id").isInCollection(resurrect))
+        .unionByName(prepared), baseParts)
+      baseRows += deltaRows - resurrect.size + n
+      clearDelta()
+      tombs --= resurrect
+    } else {
+      delta = if (deltaRows == 0) prepared
+        else materialize(delta.unionByName(prepared), defaultParts)
+      deltaRows += n
+      if (deltaRows >= baseRows) foldDelta()
+    }
+    nextAutoId += n
     invalidateAtRest()
+  }
+
+  private def defaultParts: Int = spark.sparkContext.defaultParallelism
+
+  /** Partitions of a rewritten base: as many as the base has, and at
+    * least the cluster's parallelism. */
+  private def baseParts: Int = math.max(defaultParts, base.rdd.getNumPartitions)
+
+  private def clearDelta(): Unit = {
+    delta = emptyFrame(spark)
+    deltaRows = 0
+  }
+
+  /** The delta's rows join the base; tombstones stay as they are. */
+  private def foldDelta(): Unit = {
+    base = if (baseRows == 0) delta else materialize(base.unionByName(delta), baseParts)
+    baseRows += deltaRows
+    clearDelta()
   }
 
   // rolling search-latency telemetry, SEARCH_HISTORY_SIZE=100
@@ -259,27 +315,31 @@ final class VectorStore private (
 
   /** Lazy delete via tombstone set (pythonvectordb.py:425-463, with the
     * intended exclusion semantics — SURVEY.md §2.2 T6 documents the
-    * reference's misalignment bug which we do NOT replicate). Auto-compacts
-    * past `DeletedThreshold` like the reference (pythonvectordb.py:460-461). */
+    * reference's misalignment bug which we do NOT replicate): one job finds
+    * which of `ids` are live, and those join the tombstone set. Returns
+    * that count. Auto-compacts at `DeletedThreshold` like the reference
+    * (pythonvectordb.py:460-461). */
   def delete(ids: Seq[String]): Long = synchronized {
-    import spark.implicits._
-    val del = ids.toDF("id")
-    val hit = active.join(broadcast(del), Seq("id"), "left_semi").count()
-    if (hit > 0) {
-      tombstones = tombstones.unionByName(del).distinct()
-      deletedCount += hit
+    val hits = active.filter(col("id").isInCollection(ids))
+      .select("id").collect().map(_.getString(0))
+    if (hits.nonEmpty) {
+      tombs ++= hits
       invalidateAtRest()
-      if (deletedCount >= DeletedThreshold) compact()
+      if (tombs.size >= DeletedThreshold) compact()
     }
-    hit
+    hits.length.toLong
   }
 
-  /** Fold tombstones into the base frame (pythonvectordb.py:465-510's
-    * threshold compaction; here: the rewrite that keeps the anti-join small). */
+  /** Fold the delta into the base and drop the tombstoned rows from it
+    * (pythonvectordb.py:465-510's threshold compaction): one rewrite job,
+    * after which the tombstone set is empty. */
   def compact(): Unit = synchronized {
-    base = active.localCheckpoint(eager = true)
-    tombstones = emptyTombstones(spark)
-    deletedCount = 0
+    if (deltaRows > 0 || tombs.nonEmpty) {
+      base = materialize(active, baseParts)
+      baseRows += deltaRows - tombs.size
+      clearDelta()
+      tombs = Set.empty
+    }
   }
 
   /** Engine stats (pythonvectordb.py:512-555): counts, memory estimate
@@ -298,7 +358,7 @@ final class VectorStore private (
   def stats: Map[String, Any] = {
     // consistent var snapshot under the monitor; the aggregate job runs
     // outside it (concurrent searches keep flowing)
-    val (corpus, deletedNow) = synchronized((active, deletedCount))
+    val (corpus, deletedNow) = synchronized((active, tombs.size.toLong))
     val m = corpus.agg(
       org.apache.spark.sql.functions.count(lit(1)).as("n"),
       coalesce(sum(octet_length(col("id")).cast(LongType)), lit(0L)).as("id_bytes"),
@@ -342,7 +402,7 @@ final class VectorStore private (
   }
 
   override def toString: String =
-    s"VectorStore(dim=$dim, count=$count, deleted_pending=$deletedCount)" // pythonvectordb.py:652-659
+    s"VectorStore(dim=$dim, count=$count, deleted_pending=${synchronized(tombs.size)})" // pythonvectordb.py:652-659
 
   /** Export to the reference engine's OWN `.npz` format
     * (pythonvectordb.py:572-582: version, dimension, int8 vectors,
@@ -354,13 +414,13 @@ final class VectorStore private (
     * single-node artifact, so the rows are collected at the driver by
     * design — guarded the same way toLocal is. */
   def exportNpz(path: String, maxLocalBytes: Long = QuantizedIndex.DefaultMaxLocalBytes): Unit = synchronized {
-    if (deletedCount > 0) compact()
+    if (tombs.nonEmpty) compact()
     val n = count
     require(n * (5L * dim + 64L) <= maxLocalBytes,
       s"exportNpz refused: ~${n * (5L * dim + 64L)} driver bytes at peak " +
         s"(> $maxLocalBytes); an .npz is a single-node artifact — for " +
         "cluster-sized corpora use save() (parquet).")
-    val rows = base.select(col("id"), col("qvec"), col("meta")).collect()
+    val rows = active.select(col("id"), col("qvec"), col("meta")).collect()
     val ids = rows.map(_.getString(0))
     val data = new Array[Byte](rows.length * dim)
     rows.zipWithIndex.foreach { case (r, i) =>
@@ -403,10 +463,10 @@ final class VectorStore private (
     * default 64 suits the test scale; a 100 TB store wants thousands). */
   def save(path: String, numBuckets: Int = VectorStore.DefaultSaveBuckets): Unit = synchronized {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    if (deletedCount > 0) compact() // pythonvectordb.py:568-569
+    if (tombs.nonEmpty) compact() // pythonvectordb.py:568-569
     // one task per bucket: without the repartition every task writes one
     // file into every bucket it meets (partitions x buckets files)
-    base.withColumn("id_bucket", idBucket(col("id"), numBuckets))
+    active.withColumn("id_bucket", idBucket(col("id"), numBuckets))
       .repartition(col("id_bucket"))
       .write.mode(SaveMode.Overwrite).partitionBy("id_bucket").parquet(s"$path/data")
     val meta = s"""{"version":1,"dimension":$dim,"id_buckets":$numBuckets}"""
@@ -456,16 +516,18 @@ object VectorStore {
     StructField("qvec", BinaryType, nullable = false),
     StructField("meta", MapType(StringType, StringType), nullable = true)))
 
-  private def emptyTombstones(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("id", StringType, nullable = false))))
+  private def emptyFrame(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** Coalesce to `parts` partitions and pin in executor memory: the frame
+    * becomes one in-memory scan, whatever plan built it. */
+  private def materialize(df: DataFrame, parts: Int): DataFrame =
+    df.coalesce(parts).localCheckpoint(eager = true)
 
   /** T1: declare schema, start empty. */
   def create(spark: SparkSession, dim: Int): VectorStore = {
     require(dim > 0, s"dimension must be positive, got $dim") // pythonvectordb.py:158-162
-    new VectorStore(spark, dim,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-      emptyTombstones(spark), 0L)
+    new VectorStore(spark, dim, emptyFrame(spark), 0L)
   }
 
   /** Time travel, read side: the committed versions under `path`, sorted.
@@ -541,10 +603,12 @@ object VectorStore {
     val df = if (raw.columns.contains("id_bucket")) raw.drop("id_bucket") else raw
     require(df.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
       s"schema mismatch: ${df.schema.fieldNames.mkString(",")}")
-    val badDim = df.filter(size(col("embedding")) =!= dim).count()
+    // one scan for the row count and the dimension check
+    val m = df.agg(count(lit(1)), count_if(size(col("embedding")) =!= dim)).head()
+    val badDim = m.getLong(1)
     require(badDim == 0, s"$badDim rows violate dimension $dim")
-    val st = new VectorStore(spark, dim, df, emptyTombstones(spark), 0L)
-    st.nextAutoId = st.count // reference rebuilds vector_count on load
+    val st = new VectorStore(spark, dim, df, m.getLong(0))
+    st.nextAutoId = m.getLong(0) // reference rebuilds vector_count on load
     if (raw.columns.contains("id_bucket"))
       st.atRest = buckets.map(path -> _)
     st
@@ -617,7 +681,7 @@ object VectorStore {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(localRows, parts), schema)
       .localCheckpoint(true)
-    val st = new VectorStore(spark, dim, df, emptyTombstones(spark), 0L)
+    val st = new VectorStore(spark, dim, df, count)
     st.nextAutoId = count
     st
   }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +9,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Runs `f` and returns its result with the number of Spark jobs it
+    * started: the listener bus is drained before and after, so the count
+    * holds exactly the jobs `f` submitted. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      TestListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

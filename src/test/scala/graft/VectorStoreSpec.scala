@@ -52,6 +52,34 @@ class VectorStoreSpec extends SparkSpec {
     assert(st.count == 4) // failed batches insert nothing
   }
 
+  test("addVectors rejects null ids with their own message") {
+    val st = freshStore()
+    val e = intercept[IllegalArgumentException] {
+      st.addVectors(mkRows(Seq(
+        (null, Seq(1f, 0f, 0f, 0f), Map.empty[String, String]),
+        (null, Seq(0f, 1f, 0f, 0f), Map.empty[String, String]),
+        ("e", Seq(0f, 0f, 1f, 0f), Map.empty[String, String]))))
+    }
+    assert(e.getMessage == "2 rows have a null id")
+    assert(st.count == 4)
+  }
+
+  test("addVectors checks finiteness after the cast to float") {
+    val st = freshStore()
+    // 1e300 is a finite double but overflows float to Infinity: the
+    // reference casts to float32 before isfinite (pythonvectordb.py:273,
+    // 284-285)
+    val e = intercept[IllegalArgumentException] {
+      st.addVectors(Seq(("e", Seq(1e300, 0.0, 0.0, 0.0))).toDF("id", "embedding"))
+    }
+    assert(e.getMessage == "non-finite values in 1 rows")
+    assert(st.count == 4)
+    // an in-range double batch is stored as its float image
+    st.addVectors(Seq(("f", Seq(0.0, 0.0, 0.6, 0.8))).toDF("id", "embedding"))
+    assert(st.count == 5)
+    assert(st.search(Array(0f, 0f, 0.6f, 0.8f), k = 1).collect().head.getString(0) == "f")
+  }
+
   test("search returns descending scores with nearest first") {
     val st = freshStore()
     val res = st.search(Array(1f, 0f, 0f, 0f), k = 3).collect()
