@@ -27,16 +27,22 @@ import org.apache.spark.sql.types._
   *  - T11 count           -> `count`
   *
   * State: one materialised base frame ⊕ at most one materialised delta
-  * (the rows added since the last fold, coalesced to `defaultParallelism`
-  * partitions) − the tombstone id set — Krypton's write buffer in front of
-  * a materialised base. Every add re-materialises the delta with its batch;
-  * once the delta holds at least as many rows as the base it folds into the
-  * base (a doubling rule, so a row is rewritten into the base O(log n)
-  * times), and `compact()` always folds it. Deletes below
-  * `DeletedThreshold` only grow the tombstone set. So the plan a read runs
-  * has the same shape after any number of mutations — a scan of the base, a
-  * scan of the delta and, while deletes are pending, one set-membership
-  * filter — and a search is one Spark job.
+  * (the rows added since the last fold, in at most `defaultParallelism`
+  * partitions of about the base's rows per partition) − the tombstone id
+  * set — Krypton's write buffer in front of a materialised base. An add
+  * rewrites the delta with its batch, unless the rows written into the
+  * delta since the last fold would reach the base's row count: then the
+  * delta and the batch fold into the base in one rewrite. Between two folds
+  * the delta writes fewer rows than the base holds and the fold writes the
+  * base once, so with batches of `a` rows into a base of `B` an add copies
+  * about sqrt(2aB) rows amortised, below the `B` rows its live-id duplicate
+  * check scans; a batch as large as the base folds at once. Re-adding a
+  * deleted id also folds (its dead row leaves in the rewrite), and
+  * `compact()` always folds. Deletes below `DeletedThreshold` only grow the
+  * tombstone set. So the plan a read runs has the same shape after any
+  * number of mutations — a scan of the base, a scan of the delta and, while
+  * deletes are pending, one set-membership filter — and a search is one
+  * Spark job.
   *
   * Scale: rows live in DataFrames partitioned by storage and all operators
   * are narrow scans, filters and projections (the add's duplicate checks —
@@ -54,12 +60,14 @@ final class VectorStore private (
 
   import VectorStore._
 
-  // rows added since the last fold (an empty frame when none are), and the
-  // ids deleted since the last compaction. Each tombstoned id names exactly
-  // one row of base ∪ delta, so the live count is
-  // baseRows + deltaRows − tombs.size.
+  // rows added since the last fold (an empty frame when none are), the
+  // rows written into the delta since the last fold (the sum of its sizes
+  // after each add), and the ids deleted since the last compaction. Each
+  // tombstoned id names exactly one row of base ∪ delta, so the live count
+  // is baseRows + deltaRows − tombs.size.
   private var delta: DataFrame = emptyFrame(spark)
   private var deltaRows = 0L
+  private var deltaWritten = 0L
   private var tombs = Set.empty[String]
 
   /** Active (non-deleted) rows: (id string, embedding array<float>,
@@ -81,6 +89,10 @@ final class VectorStore private (
 
   /** Live rows, from the row counts the mutations keep (no Spark job). */
   def count: Long = synchronized(baseRows + deltaRows - tombs.size)
+
+  /** Rows in the delta (0 right after a fold): package-visible so the
+    * bounds spec can check the fold rule. */
+  private[graft] def deltaRowCount: Long = synchronized(deltaRows)
 
   // monotonic auto-id offset: NOT decremented on delete (matches the
   // reference's vector_count-based `vec_{start+i}` naming which also never
@@ -121,10 +133,12 @@ final class VectorStore private (
     // int8 codes searches score. The row-local validations
     // (pythonvectordb.py:279-297) and the batch ids that re-add a
     // tombstoned id (at most tombs.size of them) are observed during the
-    // materializing job, so they cost no job of their own.
+    // materializing job, so they cost no job of their own. The batch keeps
+    // its input's partitions: a bulk load becomes the base as it is, and
+    // only the rewrites below coalesce.
     val emb = col("embedding").cast(ArrayType(FloatType))
     val checks = new Observation()
-    val prepared = materialize(withMeta.select(
+    val prepared = withMeta.select(
       col("id").cast(StringType).as("id"),
       emb.as("embedding"),
       VectorOps.quantizeInt8(emb).as("qvec"),
@@ -136,8 +150,8 @@ final class VectorStore private (
         count_if(col("embedding").isNull || size(col("embedding")) =!= dim).as("bad_dim"),
         count_if(coalesce(VectorOps.hasNonFinite(col("embedding")), lit(false))).as("nonfinite"),
         count_if(col("id").isNull).as("null_ids"),
-        collect_set(when(col("id").isInCollection(tombs), col("id"))).as("resurrect")),
-      defaultParts)
+        collect_set(when(col("id").isInCollection(tombs), col("id"))).as("resurrect"))
+      .localCheckpoint(eager = true)
     val v = checks.get
     def reject(c: Long, msg: Long => String): Unit =
       if (c > 0) throw new IllegalArgumentException(msg(c))
@@ -158,20 +172,25 @@ final class VectorStore private (
     }
 
     val resurrect = v("resurrect").asInstanceOf[scala.collection.Seq[String]].toSet
-    if (resurrect.nonEmpty) {
-      // retire the tombstones being re-added: their dead rows leave base
-      // and delta in the same rewrite that takes in the batch
-      base = materialize(base.unionByName(delta)
-        .filter(!col("id").isInCollection(resurrect))
-        .unionByName(prepared), baseParts)
-      baseRows += deltaRows - resurrect.size + n
+    val merged = deltaRows + n
+    if (resurrect.nonEmpty || deltaWritten + merged >= baseRows) {
+      // fold: the delta and the batch join the base in one rewrite, which
+      // also drops the dead rows of the ids being re-added
+      val old = base.unionByName(delta)
+      val kept = if (resurrect.isEmpty) old else old.filter(!col("id").isInCollection(resurrect))
+      base =
+        if (baseRows == 0 && deltaRows == 0) prepared
+        else materialize(kept.unionByName(prepared),
+          math.max(baseParts, prepared.rdd.getNumPartitions))
+      baseRows += merged - resurrect.size
       clearDelta()
       tombs --= resurrect
     } else {
-      delta = if (deltaRows == 0) prepared
-        else materialize(delta.unionByName(prepared), defaultParts)
-      deltaRows += n
-      if (deltaRows >= baseRows) foldDelta()
+      delta =
+        if (deltaRows == 0 && prepared.rdd.getNumPartitions <= defaultParts) prepared
+        else materialize(delta.unionByName(prepared), deltaParts(merged))
+      deltaRows = merged
+      deltaWritten += merged
     }
     nextAutoId += n
     invalidateAtRest()
@@ -183,16 +202,17 @@ final class VectorStore private (
     * least the cluster's parallelism. */
   private def baseParts: Int = math.max(defaultParts, base.rdd.getNumPartitions)
 
+  /** Partitions of a delta of `rows` rows: about as many rows to a
+    * partition as the base has, and at most the cluster's parallelism. */
+  private def deltaParts(rows: Long): Int = {
+    val perPart = math.max(1L, baseRows / math.max(1, base.rdd.getNumPartitions))
+    math.min(defaultParts.toLong, (rows + perPart - 1) / perPart).toInt.max(1)
+  }
+
   private def clearDelta(): Unit = {
     delta = emptyFrame(spark)
     deltaRows = 0
-  }
-
-  /** The delta's rows join the base; tombstones stay as they are. */
-  private def foldDelta(): Unit = {
-    base = if (baseRows == 0) delta else materialize(base.unionByName(delta), baseParts)
-    baseRows += deltaRows
-    clearDelta()
+    deltaWritten = 0
   }
 
   // rolling search-latency telemetry, SEARCH_HISTORY_SIZE=100

@@ -42,4 +42,30 @@ class VectorStoreBoundsSpec extends SparkSpec {
     assert(st.count == 2000 + 12 * 40 - 240)
     assert(planNodes(st) == nodesAfter2, "the plan of active grew with the mutations")
   }
+
+  test("small adds fold before the rows written into the delta reach the base's size") {
+    val st = VectorStore.create(spark, dim)
+    st.addVectors(rows("b", 2000, 2))
+    var written = 0L
+    var folds = 0
+    (1 to 40).foreach { round =>
+      val baseRows = st.count - st.deltaRowCount
+      st.addVectors(rows(s"s${round}_", 20, 200 + round))
+      val d = st.deltaRowCount
+      if (d == 0) folds += 1
+      written = if (d == 0) 0 else written + d
+      assert(written < baseRows,
+        s"round $round: $written rows written into the delta over a base of $baseRows")
+    }
+    assert(folds >= 1)
+    assert(st.count == 2000 + 40 * 20)
+  }
+
+  test("a bulk load keeps the partitions of its input") {
+    val st = VectorStore.create(spark, dim)
+    st.addVectors(rows("p", 1600, 3).repartition(16))
+    assert(st.active.rdd.getNumPartitions == 16)
+    st.addVectors(rows("q", 10, 4))
+    assert(st.count == 1610)
+  }
 }
