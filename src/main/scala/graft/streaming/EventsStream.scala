@@ -73,29 +73,12 @@ object EventsStream {
     * median event time (complete mode — every window's final total is in
     * the last emitted snapshot). */
   def runOnceHopping(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("hop-in")
-    try {
-      val raw = normalize(spark.read.parquet(s"$dir/events.parquet"))
-      val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
-        .collect().head.getLong(0)
-      Staged.appendOrdered(inPath.toString,
-        raw.filter(unix_micros(col("ts")) <= cut),
-        raw.filter(unix_micros(col("ts")) > cut))
-      val stream = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-      val q = hoppingAgg(stream)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+    val raw = normalize(spark.read.parquet(s"$dir/events.parquet"))
+    val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
+      .collect().head.getLong(0)
+    Staged.run(spark, queryName, "complete",
+      raw.filter(unix_micros(col("ts")) <= cut),
+      raw.filter(unix_micros(col("ts")) > cut))(hoppingAgg)
   }
 
   /** Batch twin of runOnceHopping. */

@@ -104,28 +104,9 @@ object StreamCalib {
     * is the max-n row per bin. */
   def runOnce(spark: SparkSession, dir: String,
       queryName: String): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("calib-in")
-    try {
-      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-      val raw = spark.read.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      Staged.appendOrdered(inPath.toString,
-        raw.filter(col("doc_id") % 2 === 0),
-        raw.filter(col("doc_id") % 2 === 1))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-      val q = grid(stream)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    Staged.run(spark, queryName, "update",
+      raw.filter(col("doc_id") % 2 === 0),
+      raw.filter(col("doc_id") % 2 === 1))(grid)
   }
 }

@@ -124,28 +124,10 @@ object StreamCdc {
     * construction. Returns the raw Update-mode emissions. */
   def runOnce(spark: SparkSession, dir: String,
       queryName: String): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("cdc-in")
-    try {
-      val raw = spark.read.schema(EventsStream.rawSchema(spark, dir))
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      Staged.appendOrdered(inPath.toString,
-        raw.filter(col("event_id") % 2 === 0),
-        raw.filter(col("event_id") % 2 === 1))
-      val stream = spark.readStream
-        .schema(EventsStream.rawSchema(spark, dir))
-        .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-      val q = snapshots(stream).toDF()
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+    val raw = spark.read.schema(EventsStream.rawSchema(spark, dir))
+      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    Staged.run(spark, queryName, "update",
+      raw.filter(col("event_id") % 2 === 0),
+      raw.filter(col("event_id") % 2 === 1))(snapshots)
   }
 }

@@ -105,31 +105,12 @@ object StreamCusum {
   /** Test/demo driver: two micro-batches split on the median event time. */
   def runOnce(spark: SparkSession, dir: String, queryName: String,
       mu0: Map[String, Long], h: Map[String, Long]): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("cusum-in")
-    val inDir = inPath.toString
-    try {
-      val raw = EventsStream.normalize(
-        spark.read.parquet(s"$dir/events.parquet"))
-      val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
-        .collect().head.getLong(0)
-      Staged.appendOrdered(inDir,
-        raw.filter(unix_micros(col("ts")) <= cut),
-        raw.filter(unix_micros(col("ts")) > cut))
-      val stream = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = cusum(stream, mu0, h)
-        .toDF()
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+    val raw = EventsStream.normalize(
+      spark.read.parquet(s"$dir/events.parquet"))
+    val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
+      .collect().head.getLong(0)
+    Staged.run(spark, queryName, "update",
+      raw.filter(unix_micros(col("ts")) <= cut),
+      raw.filter(unix_micros(col("ts")) > cut))(cusum(_, mu0, h))
   }
 }

@@ -93,35 +93,12 @@ object StreamDhashDedup {
       }
   }
 
-  /** Drive the streaming detector over staged document files (>= 2
-    * micro-batches via maxFilesPerTrigger=1); returns (emitted pairs,
-    * number of non-empty micro-batches). */
-  def runOnce(spark: SparkSession, dir: String, queryName: String)
-      : (DataFrame, Long) = {
-    val inDir = java.nio.file.Files.createTempDirectory("dhash-feed").toString
-    val inPath = java.nio.file.Paths.get(inDir)
-    try {
-      val raw = spark.read.parquet(s"$dir/documents.parquet")
-      Staged.appendOrdered(inDir,
-        raw.filter(col("doc_id") % 2 === 0),
-        raw.filter(col("doc_id") % 2 === 1))
-      val stream = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = pairs(stream)
-        .writeStream.outputMode("append")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      q.stop()
-      (spark.table(queryName), nBatches)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      val walk = Files.walk(inPath)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+  /** Drive the streaming detector over the documents fixture in two
+    * micro-batches (even doc_ids, then odd); returns the emitted pairs. */
+  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    Staged.run(spark, queryName, "append",
+      raw.filter(col("doc_id") % 2 === 0),
+      raw.filter(col("doc_id") % 2 === 1))(pairs(_))
   }
 }

@@ -81,40 +81,19 @@ object StreamDrift {
 
   /** Test/demo driver: arm on the event_id % 4 < 2 history half, stream
     * the other half in two staged micro-batches; update-mode memory sink.
-    * Returns (final snapshot, non-empty micro-batches, (lo, width), ref,
-    * the streamed slice as a batch frame for the equivalence proof). */
+    * Returns (final snapshot, (lo, width), ref, the streamed slice as a
+    * batch frame for the equivalence proof). */
   def runOnce(spark: SparkSession, dir: String, queryName: String)
-      : (DataFrame, Long, (Double, Double), Map[String, Array[Byte]], DataFrame) = {
-    val inPath = java.nio.file.Files.createTempDirectory("sdrift-in")
-    val inDir = inPath.toString
-    try {
-      val raw = graft.Tables.events(spark, dir)
-        .select(col("event_id"), col("event_type"), col("value"))
-      val dom = StreamQuantiles.armDomain(raw)
-      val history = raw.filter(col("event_id") % 4 < 2)
-      val live = raw.filter(col("event_id") % 4 >= 2)
-      val ref = armReference(history, dom._1, dom._2)
-      Staged.appendOrdered(inDir,
-        live.filter(col("event_id") % 2 === 0),
-        live.filter(col("event_id") % 2 === 1))
-      val stream = spark.readStream
-        .schema(spark.read.parquet(inDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = drift(stream, dom._1, dom._2, ref)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      q.stop()
-      (spark.table(queryName), nBatches, dom, ref, live)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      val walk = Files.walk(inPath)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+      : (DataFrame, (Double, Double), Map[String, Array[Byte]], DataFrame) = {
+    val raw = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val dom = StreamQuantiles.armDomain(raw)
+    val history = raw.filter(col("event_id") % 4 < 2)
+    val live = raw.filter(col("event_id") % 4 >= 2)
+    val ref = armReference(history, dom._1, dom._2)
+    val table = Staged.run(spark, queryName, "update",
+      live.filter(col("event_id") % 2 === 0),
+      live.filter(col("event_id") % 2 === 1))(drift(_, dom._1, dom._2, ref))
+    (table, dom, ref, live)
   }
 }

@@ -72,31 +72,12 @@ object StreamEwma {
     * the in-order contract holds across the split) and returns the raw
     * Update-mode output; readers take the max-n_orders snapshot per key. */
   def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("ewma-in")
-    val inDir = inPath.toString
-    try {
-      val orders = spark.read.schema(rawSchema)
-        .option("pathGlobFilter", "orders.parquet").parquet(dir)
-      val cut = orders.agg(expr("percentile_approx(o_orderdate, 0.5)"))
-        .collect().head.getTimestamp(0)
-      Staged.appendOrdered(inDir,
-        orders.filter(col("o_orderdate") <= lit(cut)),
-        orders.filter(col("o_orderdate") > lit(cut)))
-      val stream = spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = ewma(stream)
-        .toDF()
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+    val orders = spark.read.schema(rawSchema)
+      .option("pathGlobFilter", "orders.parquet").parquet(dir)
+    val cut = orders.agg(expr("percentile_approx(o_orderdate, 0.5)"))
+      .collect().head.getTimestamp(0)
+    Staged.run(spark, queryName, "update",
+      orders.filter(col("o_orderdate") <= lit(cut)),
+      orders.filter(col("o_orderdate") > lit(cut)))(ewma)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
@@ -107,39 +107,15 @@ object StreamEwmaV2 {
     * micro-batches on the median order date (in-order across the split,
     * the StreamEwma contract), RocksDB state store (state-v2
     * requirement). Returns every settled snapshot emitted. */
-  def runOnce(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queryName: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val inPath = java.nio.file.Files.createTempDirectory("ewmav2-in")
-    try {
-      val orders = spark.read.schema(StreamEwma.rawSchema)
-        .option("pathGlobFilter", "orders.parquet").parquet(dir)
-      val cut = orders.agg(expr("percentile_approx(o_orderdate, 0.5)"))
-        .collect().head.getTimestamp(0)
-      Staged.appendOrdered(inPath.toString,
+  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+    val orders = spark.read.schema(StreamEwma.rawSchema)
+      .option("pathGlobFilter", "orders.parquet").parquet(dir)
+    val cut = orders.agg(expr("percentile_approx(o_orderdate, 0.5)"))
+      .collect().head.getTimestamp(0)
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "append",
         orders.filter(col("o_orderdate") <= lit(cut)),
-        orders.filter(col("o_orderdate") > lit(cut)))
-      val stream = spark.readStream.schema(StreamEwma.rawSchema)
-        .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-      val q = settled(stream).toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
+        orders.filter(col("o_orderdate") > lit(cut)))(settled)
     }
   }
 }

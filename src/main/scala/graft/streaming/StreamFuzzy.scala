@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming._
   * levenshtein.
   *
   * State: a ListState member log per (block, variant) bucket — point
-  * appends, never a rewrite (the StreamNearDupV2 rationale); bucket
+  * appends, never a rewrite (the StreamNearDup rationale); bucket
   * population is the batch join's per-key bucket (~1–3 rows measured),
   * capped loudly at MaxBucket against degenerate keys. No event time
   * anywhere: arrivals may be split across triggers arbitrarily
@@ -99,35 +99,15 @@ object StreamFuzzy {
   }
 
   /** Test/demo driver: customers arrive in TWO micro-batches split by
-    * custkey PARITY (no event time in this domain at all); returns the
-    * emitted pairs. */
+    * custkey PARITY (no event time in this domain at all), RocksDB-backed;
+    * returns the emitted pairs. */
   def runOnce(spark: SparkSession, dir: String,
       queryName: String): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("fuzzy-in")
-    try {
-      val schema = spark.read
-        .parquet(s"$dir/customer.parquet").schema
-      val raw = spark.read.schema(schema)
-        .option("pathGlobFilter", "customer.parquet").parquet(dir)
-      Staged.appendOrdered(inPath.toString,
+    val raw = spark.read.parquet(s"$dir/customer.parquet")
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "append",
         raw.filter(col("c_custkey") % 2 === 0),
-        raw.filter(col("c_custkey") % 2 === 1))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-      val q = StreamSessions.withRocksDb(spark) {
-        pairs(stream).toDF()
-          .writeStream.outputMode("append")
-          .format("memory").queryName(queryName)
-          .start()
-      }
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
+        raw.filter(col("c_custkey") % 2 === 1))(pairs)
     }
   }
 }

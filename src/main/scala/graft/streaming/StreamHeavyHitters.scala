@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming._
 
 /** Streaming heavy hitters — the ingestion-side twin of the batch
   * q_heavy_hitters (count-min sketch): a SPACE-SAVING (Misra-Gries
@@ -32,11 +32,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `n_seen` (items processed so far) in Update mode; readers take the
   * max-`n_seen` snapshot per shard — the same convention a compacted
   * changelog topic gives downstream consumers.
+  *
+  * State layout: state-v2 `transformWithState`, RocksDB-backed. Each
+  * token's (count, error) slot is its own MAPSTATE entry and `n` a
+  * ValueState, so the WRITES of a trigger are point writes for the
+  * tokens that arrived (plus one removal per eviction) instead of
+  * rewriting the shard's whole summary as one state value. The READS are
+  * not point-only: every trigger scans all of the shard's slots twice —
+  * once to count them (MapState has no O(1) size) and once to re-emit
+  * the summary in Update mode — and each eviction scans them once more
+  * for the (count, token) minimum. All three scans are bounded by m.
+  * TimeMode.None — no timers, no TTL — so the query quiesces normally
+  * under processAllAvailable.
   */
 object StreamHeavyHitters {
 
   final case class TokRow(shard: Int, tok: String)
-  final case class MGState(toks: Map[String, (Long, Long)], n: Long)
+  final case class Slot(cnt: Long, err: Long)
   final case class HHRow(shard: Int, tok: String, cnt: Long, err: Long,
       n_seen: Long)
 
@@ -54,61 +66,82 @@ object StreamHeavyHitters {
   /** The per-shard space-saving update. Eviction picks the (count, token)
     * minimum — the lexicographic tie-break keeps eviction deterministic
     * for a given arrival order. */
+  class MGMapProcessor(m: Int) extends StatefulProcessor[Int, TokRow, HHRow] {
+    @transient private var slots: MapState[String, Slot] = _
+    @transient private var seen: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      slots = getHandle.getMapState[String, Slot]("slots",
+        Encoders.STRING, Encoders.product[Slot], TTLConfig.NONE)
+      seen = getHandle.getValueState[Long]("n",
+        Encoders.scalaLong, TTLConfig.NONE)
+    }
+
+    override def handleInputRows(key: Int, rows: Iterator[TokRow],
+        timerValues: TimerValues): Iterator[HHRow] = {
+      // size is tracked locally per trigger (MapState has no O(1) size);
+      // the map is bounded at m so the initial count scan is bounded too
+      var size = 0
+      val it0 = slots.iterator()
+      while (it0.hasNext) { it0.next(); size += 1 }
+      var n = if (seen.exists()) seen.get() else 0L
+      rows.foreach { r =>
+        n += 1
+        if (slots.containsKey(r.tok)) {
+          val s = slots.getValue(r.tok)
+          slots.updateValue(r.tok, Slot(s.cnt + 1, s.err))
+        } else if (size < m) {
+          slots.updateValue(r.tok, Slot(1L, 0L))
+          size += 1
+        } else {
+          // eviction: O(m) scan for the (count, token) minimum
+          var evTok: String = null
+          var evCnt = Long.MaxValue
+          val it = slots.iterator()
+          while (it.hasNext) {
+            val e = it.next()
+            if (e._2.cnt < evCnt ||
+                (e._2.cnt == evCnt && e._1 < evTok)) {
+              evTok = e._1; evCnt = e._2.cnt
+            }
+          }
+          slots.removeKey(evTok)
+          slots.updateValue(r.tok, Slot(evCnt + 1, evCnt))
+        }
+      }
+      seen.update(n)
+      val out = scala.collection.mutable.ArrayBuffer.empty[HHRow]
+      val it2 = slots.iterator()
+      while (it2.hasNext) {
+        val e = it2.next()
+        out += HHRow(key, e._1, e._2.cnt, e._2.err, n)
+      }
+      out.iterator
+    }
+  }
+
+  /** The space-saving sketch over a (possibly streaming) document frame;
+    * needs the RocksDB state store (`Staged.withRocksDb`). */
   def sketch(docs: DataFrame, numShards: Int = 8, m: Int = 64): Dataset[HHRow] = {
     import docs.sparkSession.implicits._
     tokens(docs, numShards)
       .groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (shard: Int, it: Iterator[TokRow], state: GroupState[MGState]) =>
-          val st = state.getOption.getOrElse(MGState(Map.empty, 0L))
-          var mg = st.toks
-          var n = st.n
-          it.foreach { r =>
-            n += 1
-            mg.get(r.tok) match {
-              case Some((c, e)) => mg = mg.updated(r.tok, (c + 1, e))
-              case None if mg.size < m => mg = mg.updated(r.tok, (1L, 0L))
-              case None =>
-                val (evTok, (evCnt, _)) =
-                  mg.minBy { case (t, (c, _)) => (c, t) }
-                mg = (mg - evTok).updated(r.tok, (evCnt + 1, evCnt))
-            }
-          }
-          state.update(MGState(mg, n))
-          mg.iterator.map { case (t, (c, e)) => HHRow(shard, t, c, e, n) }
-      }
+      .transformWithState(new MGMapProcessor(m),
+        TimeMode.None(), OutputMode.Update())
   }
 
   /** Test/demo driver: ingests the corpus in TWO micro-batches (even
     * doc_ids then odd) so the equivalence checks exercise state
-    * carry-over between triggers; returns the raw Update-mode output
-    * (readers take the max-n_seen snapshot per shard). */
-  def runOnce(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queryName: String, numShards: Int = 8, m: Int = 64): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("hh-in")
-    val inDir = inPath.toString
-    try {
-      val docs = spark.read.schema(StreamDedup.rawSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      Staged.appendOrdered(inDir,
+    * carry-over between triggers, RocksDB-backed; returns the raw
+    * Update-mode output (readers take the max-n_seen snapshot per shard). */
+  def runOnce(spark: SparkSession, dir: String, queryName: String,
+      numShards: Int = 8, m: Int = 64): DataFrame = {
+    val docs = spark.read.schema(StreamDedup.rawSchema)
+      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "update",
         docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-      val stream = spark.readStream.schema(StreamDedup.rawSchema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = sketch(stream, numShards, m)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // the memory sink holds the full result; the staged corpus copy
-      // is dead weight from here
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
+        docs.filter(col("doc_id") % 2 === 1))(sketch(_, numShards, m))
     }
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming._
   *    state + this trigger's arrivals) and starts its own heap.
   *
   * State per cell is O(cell members): a ListState build-member log
-  * (append-only — the StreamNearDupV2 rationale) and a MapState of
+  * (append-only — the StreamNearDup rationale) and a MapState of
   * probe heaps (point reads/writes per changed probe). Every heap
   * change emits a versioned (qid, cell) update; the CURRENT graph is
   * the max-version row per (qid, cell) with the ≤2 per-cell heaps
@@ -142,7 +142,7 @@ object StreamKnn {
         if (top.nonEmpty)
           out += KnnUpdate(r.vec_id, cell, 1L, st.nids, st.scores)
       }
-      // 3. append-only member log (point appends — StreamNearDupV2)
+      // 3. append-only member log (point appends — StreamNearDup)
       newBuild.foreach(members.appendValue)
       out.result().iterator
     }
@@ -201,36 +201,13 @@ object StreamKnn {
   def runOnce(spark: SparkSession, dir: String, queryName: String,
       cut: Long = 250L): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val inPath = java.nio.file.Files.createTempDirectory("knn-in")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val cents = frozenCentroids(spark, dir)
-      val emb = spark.read.schema(StreamIndexIngest.embSchema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-      Staged.appendOrdered(inPath.toString,
+    val cents = frozenCentroids(spark, dir)
+    val emb = spark.read.schema(StreamIndexIngest.embSchema)
+      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "append",
         emb.filter(col("vec_id") < cut),
-        emb.filter(col("vec_id") >= cut))
-      val stream = spark.readStream.schema(StreamIndexIngest.embSchema)
-        .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-      val q = updates(stream, cents)
-        .writeStream.outputMode("append")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
+        emb.filter(col("vec_id") >= cut))(updates(_, cents))
     }
   }
 }

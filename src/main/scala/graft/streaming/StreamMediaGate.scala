@@ -49,36 +49,15 @@ object StreamMediaGate {
   }
 
   /** Test/demo driver: the documents fixture split into two staged
-    * micro-batches on doc_id parity; update-mode memory sink. Returns
-    * (final counter table, number of non-empty micro-batches) — the
-    * batch count is the split witness, because the memory sink retains
-    * only the latest update snapshot for an aggregation. */
+    * micro-batches on doc_id parity; update-mode memory sink. Returns the
+    * final counter table (the memory sink retains only the latest update
+    * snapshot of an aggregation; `Staged.run` checks the split gave two
+    * triggers). */
   def runOnce(spark: SparkSession, dir: String,
-      queryName: String): (DataFrame, Long) = {
-    val inPath = java.nio.file.Files.createTempDirectory("mediagate-in")
-    val inDir = inPath.toString
-    try {
-      val raw = spark.read.parquet(s"$dir/documents.parquet")
-      Staged.appendOrdered(inDir,
-        raw.filter(col("doc_id") % 2 === 0),
-        raw.filter(col("doc_id") % 2 === 1))
-      val stream = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = gate(stream)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      q.stop()
-      (spark.table(queryName), nBatches)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      val walk = Files.walk(inPath)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+      queryName: String): DataFrame = {
+    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    Staged.run(spark, queryName, "update",
+      raw.filter(col("doc_id") % 2 === 0),
+      raw.filter(col("doc_id") % 2 === 1))(gate)
   }
 }

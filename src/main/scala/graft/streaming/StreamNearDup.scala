@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.ops.TextQueries
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming._
 
 /** Streaming near-duplicate candidate detection — the ingestion-side twin
   * of TextQueries.minhashPairs: every arriving document lands in its 4
@@ -23,6 +23,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    the same quadratic failure the batch join has — so production
   *    deployments cap bucket membership / widen bands, and the cap is a
   *    parameter here.
+  *
+  * State layout: each bucket's membership is a state-v2 LISTSTATE member
+  * log (`transformWithState`, RocksDB-backed). A bucket's membership is
+  * append-only — a new member never mutates earlier entries — so
+  * `ListState.appendValue` makes each admission a POINT APPEND: earlier
+  * members are never re-serialized, where one Seq-valued state would be
+  * rewritten whole on every trigger that touches the bucket. Reads still
+  * scan the list (needed anyway to emit pairs against every earlier
+  * member). TimeMode.None — no timers, no TTL — so the query quiesces
+  * normally.
   */
 object StreamNearDup {
 
@@ -54,47 +64,58 @@ object StreamNearDup {
         concat_ws("|", m(6), m(7)).as("b3"))
   }
 
-  /** Candidate pairs from a (possibly streaming) document frame.
-    * `maxBucket` caps per-bucket membership: a bucket past the cap stops
-    * emitting (and logs nothing — the batch job is the backstop), the
-    * standard guard against degenerate buckets flooding state. */
+  class BucketProcessor(maxBucket: Int)
+      extends StatefulProcessor[(Int, String), BandRow, CandPair] {
+    @transient private var members: ListState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      members = getHandle.getListState[Long]("members",
+        Encoders.scalaLong, TTLConfig.NONE)
+
+    override def handleInputRows(key: (Int, String), rows: Iterator[BandRow],
+        timerValues: TimerValues): Iterator[CandPair] = {
+      var cur = members.get().toSeq
+      val out = Seq.newBuilder[CandPair]
+      // deterministic intra-batch order; replays stay idempotent
+      rows.map(_.doc_id).toSeq.distinct.sorted.foreach { d =>
+        if (!cur.contains(d) && cur.size < maxBucket) {
+          cur.foreach(o => out += CandPair(math.min(o, d), math.max(o, d)))
+          members.appendValue(d) // point append — earlier members untouched
+          cur = cur :+ d
+        }
+      }
+      out.result().iterator
+    }
+  }
+
+  /** Candidate pairs from a (possibly streaming) document frame; needs
+    * the RocksDB state store (`Staged.withRocksDb`). `maxBucket` caps
+    * per-bucket membership: a bucket past the cap stops emitting (and
+    * logs nothing — the batch job is the backstop), the standard guard
+    * against degenerate buckets flooding state. */
   def candidates(docs: DataFrame, maxBucket: Int = 1024): Dataset[CandPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val rows = bandCols(docs)
-      .select(col("doc_id"), posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-        .as(Seq("band", "key")))
+    bandCols(docs)
+      .select(col("doc_id"),
+        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
+          .as(Seq("band", "key")))
       .as[BandRow]
-    rows.groupByKey(r => (r.band, r.key))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, String), it: Iterator[BandRow], state: GroupState[Seq[Long]]) =>
-          var members = state.getOption.getOrElse(Seq.empty)
-          val out = Seq.newBuilder[CandPair]
-          // deterministic intra-batch order; replays stay idempotent
-          it.map(_.doc_id).toSeq.distinct.sorted.foreach { d =>
-            if (!members.contains(d) && members.size < maxBucket) {
-              members.foreach(o =>
-                out += CandPair(math.min(o, d), math.max(o, d)))
-              members = members :+ d
-            }
-          }
-          state.update(members)
-          out.result().iterator
-      }
+      .groupByKey(r => (r.band, r.key))
+      .transformWithState(new BucketProcessor(maxBucket),
+        TimeMode.None(), OutputMode.Append())
   }
 
-  /** Drive the streaming detector over the static documents parquet via
-    * the memory sink; returns the emitted candidate pairs. */
+  /** Drive the detector over the documents fixture in two micro-batches
+    * (doc_id < 250, then the rest), RocksDB-backed; returns the emitted
+    * candidate pairs. */
   def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val stream = spark.readStream.schema(StreamDedup.rawSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val q = candidates(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    val docs = spark.read.schema(StreamDedup.rawSchema)
+      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "append",
+        docs.filter(col("doc_id") < 250),
+        docs.filter(col("doc_id") >= 250))(candidates(_))
+    }
   }
 }

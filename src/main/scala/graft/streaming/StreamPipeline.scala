@@ -108,34 +108,16 @@ object StreamPipeline {
     * RETRANSMITS (every third event duplicated — the at-least-once
     * failure mode stage 1 exists for), split into two ordered
     * micro-batches; RocksDB state store. Returns the sealed sessions. */
-  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamSessions.withRocksDb(spark) {
-      val inPath = java.nio.file.Files.createTempDirectory("pipe-in")
-      try {
-        val raw = EventsStream.normalize(
-          spark.read.parquet(s"$dir/events.parquet"))
-        val dup = raw.filter(col("event_id") % 3 === 0)
-        val withRetrans = raw.unionAll(dup)
-        val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
-          .collect().head.getLong(0)
-        Staged.appendOrdered(inPath.toString,
-          withRetrans.filter(unix_micros(col("ts")) <= cut),
-          withRetrans.filter(unix_micros(col("ts")) > cut))
-        val stream = spark.readStream
-          .schema(spark.read.parquet(inPath.toString).schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-        val q = dedupSessionize(stream).toDF()
-          .writeStream.outputMode("append")
-          .format("memory").queryName(queryName)
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        spark.table(queryName)
-      } finally {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
+  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+    val raw = EventsStream.normalize(
+      spark.read.parquet(s"$dir/events.parquet"))
+    val withRetrans = raw.unionAll(raw.filter(col("event_id") % 3 === 0))
+    val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
+      .collect().head.getLong(0)
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "append",
+        withRetrans.filter(unix_micros(col("ts")) <= cut),
+        withRetrans.filter(unix_micros(col("ts")) > cut))(dedupSessionize)
     }
+  }
 }

@@ -60,36 +60,15 @@ object StreamQuantiles {
   /** Test/demo driver: events split into two staged micro-batches on
     * event_id parity, armed on the full history (the monitoring shape:
     * domain from history, stream from now on); update-mode memory sink.
-    * Returns (final snapshot, non-empty micro-batches). */
+    * Returns (final snapshot, armed (lo, width)). */
   def runOnce(spark: SparkSession, dir: String,
-      queryName: String): (DataFrame, Long, (Double, Double)) = {
-    val inPath = java.nio.file.Files.createTempDirectory("squant-in")
-    val inDir = inPath.toString
-    try {
-      val raw = graft.Tables.events(spark, dir)
-        .select(col("event_id"), col("event_type"), col("value"))
-      val dom = armDomain(raw)
-      Staged.appendOrdered(inDir,
-        raw.filter(col("event_id") % 2 === 0),
-        raw.filter(col("event_id") % 2 === 1))
-      val stream = spark.readStream
-        .schema(spark.read.parquet(inDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = quantiles(stream, dom._1, dom._2)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      q.stop()
-      (spark.table(queryName), nBatches, dom)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      val walk = Files.walk(inPath)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+      queryName: String): (DataFrame, (Double, Double)) = {
+    val raw = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"), col("value"))
+    val dom = armDomain(raw)
+    val table = Staged.run(spark, queryName, "update",
+      raw.filter(col("event_id") % 2 === 0),
+      raw.filter(col("event_id") % 2 === 1))(quantiles(_, dom._1, dom._2))
+    (table, dom)
   }
 }

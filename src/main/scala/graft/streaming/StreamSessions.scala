@@ -113,48 +113,19 @@ object StreamSessions {
       .select(col("user_id"), unix_micros(col("sw.start")).as("s_start"),
         unix_micros(col("sw.end")).as("s_end"), col("n"))
 
-  private[streaming] def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  /** Run the sessionizer over the events fixture split into two
+    * micro-batches on the median event time, RocksDB state store (the
+    * state-v2 requirement). Returns the sealed sessions the stream
+    * emitted. */
+  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
+    val raw = EventsStream.normalize(
+      spark.read.parquet(s"$dir/events.parquet"))
+    val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
+      .collect().head.getLong(0)
+    Staged.withRocksDb(spark) {
+      Staged.run(spark, queryName, "append",
+        raw.filter(unix_micros(col("ts")) <= cut),
+        raw.filter(unix_micros(col("ts")) > cut))(sessions)
     }
   }
-
-  /** Run the sessionizer over the events fixture split into two
-    * micro-batches on the median event time (maxFilesPerTrigger=1),
-    * RocksDB state store (the state-v2 requirement). Returns the sealed
-    * sessions the stream emitted. */
-  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    withRocksDb(spark) {
-      val inPath = java.nio.file.Files.createTempDirectory("sess-in")
-      try {
-        val raw = EventsStream.normalize(
-          spark.read.parquet(s"$dir/events.parquet"))
-        val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
-          .collect().head.getLong(0)
-        Staged.appendOrdered(inPath.toString,
-          raw.filter(unix_micros(col("ts")) <= cut),
-          raw.filter(unix_micros(col("ts")) > cut))
-        val stream = spark.readStream
-          .schema(spark.read.parquet(inPath.toString).schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString)
-        val q = sessions(stream).toDF()
-          .writeStream.outputMode("append")
-          .format("memory").queryName(queryName)
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        spark.table(queryName)
-      } finally {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-    }
 }

@@ -55,37 +55,17 @@ object StreamTransitions {
       .agg(count(lit(1)).as("n"))
 
   /** Test/demo driver: two micro-batches split on the median event time
-    * (cross-batch transitions must survive via state). */
+    * (cross-batch transitions must survive via state). The events are
+    * normalized BEFORE splitting so the micro-batch files carry plain
+    * TimestampType regardless of the fixture's physical representation,
+    * and transitions()'s normalize is a no-op on the stream. */
   def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val inPath = java.nio.file.Files.createTempDirectory("trans-in")
-    val inDir = inPath.toString
-    try {
-      // Normalize BEFORE splitting so the micro-batch files carry plain
-      // TimestampType regardless of the fixture's physical representation;
-      // the stream then reads the normalized schema and transitions()'s
-      // normalize is a no-op.
-      val raw = EventsStream.normalize(
-        spark.read.parquet(s"$dir/events.parquet"))
-      val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
-        .collect().head.getLong(0)
-      Staged.appendOrdered(inDir,
-        raw.filter(unix_micros(col("ts")) <= cut),
-        raw.filter(unix_micros(col("ts")) > cut))
-      val stream = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = transitions(stream)
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(inPath).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+    val raw = EventsStream.normalize(
+      spark.read.parquet(s"$dir/events.parquet"))
+    val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
+      .collect().head.getLong(0)
+    Staged.run(spark, queryName, "append",
+      raw.filter(unix_micros(col("ts")) <= cut),
+      raw.filter(unix_micros(col("ts")) > cut))(transitions)
   }
 }
