@@ -290,6 +290,93 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Exact per-(shard, token) counts of `docs`, the truth the space-saving
+    * snapshots are checked against. */
+  private def exactShardCounts(docs: org.apache.spark.sql.DataFrame,
+      numShards: Int): Map[(Int, String), Long] =
+    graft.streaming.StreamHeavyHitters.tokens(docs, numShards)
+      .groupBy("shard", "tok").count().collect()
+      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  /** Every emitted snapshot of a heavy-hitters run, keyed (shard, n_seen):
+    * token -> (cnt, err). */
+  private def hhSnapshots(out: org.apache.spark.sql.DataFrame)
+      : Map[(Int, Long), Map[String, (Long, Long)]] =
+    out.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getLong(4)))
+      .groupBy(r => (r._1, r._5))
+      .map { case (k, rs) => k -> rs.map(r => r._2 -> ((r._3, r._4))).toMap }
+
+  test("state-v2 MapState heavy hitters: exact regime equals batch AND the fmgws twin") {
+    import org.apache.spark.sql.functions.col
+    // m = 128 >= per-shard vocabulary -> nothing evicts, so the MapState
+    // point-update layout must give EVERY snapshot, not only the last,
+    // the exact counts of the prefix ingested so far (trigger 1 = even
+    // doc_ids); and its twin — the same sketch fed the corpus as one
+    // trigger — must end in the same summary
+    val hh = graft.streaming.StreamHeavyHitters
+    val docs = Tables.documents(spark, sf001)
+    val split = hhSnapshots(hh.runOnce(spark, sf001, "hh2_exact_test",
+      numShards = 8, m = 128))
+    val whole = hhSnapshots(Staged.withRocksDb(spark) {
+      Staged.run(spark, "hh2_exact_single_test", "update", docs)(
+        hh.sketch(_, 8, 128))
+    })
+    val prefixes = Seq(docs.filter(col("doc_id") % 2 === 0), docs)
+      .map(d => exactShardCounts(d, 8))
+    def forShard(c: Map[(Int, String), Long], s: Int): Map[String, Long] =
+      c.collect { case ((`s`, tok), n) => tok -> n }
+    split.foreach { case ((s, ns), slots) =>
+      val truth = prefixes.map(forShard(_, s)).find(_.values.sum == ns)
+      assert(truth.nonEmpty, s"shard $s snapshot at n_seen=$ns matches no prefix")
+      assert(slots.map { case (tok, (cnt, _)) => tok -> cnt } == truth.get,
+        s"shard $s at n_seen=$ns differs from the exact prefix counts")
+      assert(slots.values.forall(_._2 == 0L), "exact regime must carry zero error")
+    }
+    assert(split.keys.exists { case (s, ns) =>
+      ns < forShard(prefixes(1), s).values.sum
+    }, "no intermediate snapshot: the split did not carry state across triggers")
+    def last(snaps: Map[(Int, Long), Map[String, (Long, Long)]]) =
+      snaps.groupBy(_._1._1).map { case (s, g) => s -> g.maxBy(_._1._2)._2 }
+    assert(last(split).nonEmpty)
+    assert(last(split) == last(whole), "two-trigger and one-trigger summaries differ")
+  }
+
+  test("state-v2 MapState heavy hitters: tight regime keeps the guarantees") {
+    import org.apache.spark.sql.functions.col
+    // m = 4 per shard: heavy eviction. The space-saving bounds hold at
+    // EVERY emitted snapshot — the trigger-1 summary against the exact
+    // counts of the even doc_ids it saw, the final one against the corpus
+    val m = 4
+    val docs = Tables.documents(spark, sf001)
+    val snaps = hhSnapshots(graft.streaming.StreamHeavyHitters
+      .runOnce(spark, sf001, "hh2_tight_test", numShards = 8, m = m))
+    assert(snaps.nonEmpty)
+    val prefixes = Seq(docs.filter(col("doc_id") % 2 === 0), docs)
+      .map(d => exactShardCounts(d, 8))
+    def forShard(c: Map[(Int, String), Long], s: Int): Map[String, Long] =
+      c.collect { case ((`s`, tok), n) => tok -> n }
+    snaps.foreach { case ((s, ns), slots) =>
+      val truth = prefixes.map(forShard(_, s)).find(_.values.sum == ns)
+      assert(truth.nonEmpty, s"shard $s snapshot at n_seen=$ns matches no prefix")
+      val t = truth.get
+      assert(slots.size <= m, s"shard $s holds ${slots.size} > m=$m slots")
+      slots.foreach { case (tok, (cnt, err)) =>
+        val tc = t.getOrElse(tok, 0L)
+        assert(tc <= cnt, s"($s, $tok) at n_seen=$ns undercounted: $cnt < true $tc")
+        assert(cnt - err <= tc, s"($s, $tok) at n_seen=$ns: $cnt - $err > true $tc")
+      }
+      t.foreach { case (tok, tc) =>
+        if (tc > ns.toDouble / m)
+          assert(slots.contains(tok),
+            s"frequent token $tok (true $tc > n/m=${ns / m}) missing from shard $s at n_seen=$ns")
+      }
+    }
+    assert(snaps.keys.exists { case (s, ns) =>
+      ns < forShard(prefixes(1), s).values.sum
+    }, "no intermediate snapshot: the split did not carry state across triggers")
+  }
+
   test("streaming near-dup state survives a checkpointed restart (no re-emission)") {
     // exactly-once across restart: run 1 ingests the first half of the
     // corpus and stops; run 2 resumes from the SAME checkpoint on the
@@ -355,6 +442,53 @@ class StreamingSpec extends SparkSpec {
         .collect().map(p => (p.doc_a, p.doc_b)).toSet
     }
     assert(pairs == Set((0L, 1L), (0L, 2L), (1L, 2L)))
+  }
+
+  test("state-v2 ListState near-dup: distinct pairs equal the batch minhash pipeline") {
+    import org.apache.spark.sql.functions.col
+    // the ListState member log across THREE triggers of interleaved
+    // doc_ids (residue mod 3), so a bucket often logs a member before a
+    // smaller id arrives: the distinct pairs still equal the batch
+    // pipeline, and the emitted multiset of (band, pair) slots equals a
+    // single-trigger run's — nothing lost or re-emitted across triggers
+    val docs = Tables.documents(spark, sf001)
+    val (streamed, single) = Staged.withRocksDb(spark) {
+      val s = Staged.run(spark, "neardup_liststate_test", "append",
+        (0 until 3).map(r => docs.filter(col("doc_id") % 3 === r)): _*)(
+        graft.streaming.StreamNearDup.candidates(_))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      (s, graft.streaming.StreamNearDup.candidates(docs)
+        .collect().map(p => (p.doc_a, p.doc_b)).toSeq)
+    }
+    val batch = graft.ops.TextQueries.minhashPairs(spark, sf001)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch.nonEmpty)
+    assert(streamed.toSet == batch,
+      s"missing=${(batch -- streamed).take(5)} extra=${(streamed.toSet -- batch).take(5)}")
+    assert(streamed.sorted == single.sorted,
+      s"${streamed.size} slots over three triggers vs ${single.size} in one")
+    assert(batch.exists { case (a, b) => a % 3 != b % 3 },
+      "split degenerate: no cross-trigger pair to prove state carry-over")
+  }
+
+  test("state-v2 ListState near-dup: bucket cap bounds state (degenerate-bucket guard)") {
+    import spark.implicits._
+    // 6 identical docs share all 4 band buckets; cap 3, staged as {4, 5}
+    // then {0..3}: admission follows ARRIVAL, so the members 4 and 5
+    // logged by trigger 1 leave one slot, taken by the smallest id of
+    // trigger 2, and nothing past the cap ever emits
+    def doc(i: Long) = (i, "alpha beta gamma delta epsilon zeta", "en", "t", 34L)
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    val pairs = Staged.withRocksDb(spark) {
+      Staged.run(spark, "neardup_cap_test", "append",
+        Seq(4L, 5L).map(doc).toDF(cols: _*),
+        (0L until 4L).map(doc).toDF(cols: _*))(
+        graft.streaming.StreamNearDup.candidates(_, maxBucket = 3))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    assert(pairs.toSet == Set((4L, 5L), (0L, 4L), (0L, 5L)))
+    // each pair once per band bucket
+    assert(pairs.size == 4 * 3, s"pairs=$pairs")
   }
 
   test("staged harness: a batch that filters to zero rows fails the one-trigger-per-batch check") {
