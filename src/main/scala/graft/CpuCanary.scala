@@ -2,7 +2,7 @@ package graft
 
 /** Fixed-work CPU canary for two-sided contention detection.
   *
-  * Host steal (HostSteal) is ONE-sided: high steal ⇒ the window was
+  * Host steal (Measure.stealSeconds) is ONE-sided: high steal ⇒ the window was
   * poisoned, but zero steal ⇏ clean — frequency/IPC loss from a busy
   * host (SMT siblings, memory-bandwidth neighbors, clock capping) and
   * long-session JIT/code-cache degradation leave no trace in
@@ -122,10 +122,4 @@ object CpuCanary {
     val (a2, g2) = runPhases()
     (math.min(a1, a2) / a, math.min(g1, g2) / g)
   }
-
-  /** The clean/dirty verdict for a reading: clean means BOTH phases
-    * delivered near-calibrated throughput — the two-sided complement
-    * to a low steal delta. */
-  def isClean(r: (Double, Double)): Boolean =
-    r._1 <= AluClean && r._2 <= GatherClean
 }

@@ -38,16 +38,7 @@ object QTime {
     System.gc()
 
     SparkEntry.registry.filter(q => names.contains(q.name)).foreach { q =>
-      val ts = (1 to reps).map { _ =>
-        val s0 = HostSteal.stealSeconds()
-        val t0 = System.nanoTime()
-        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val steal = if (s0 < 0) -1.0 else HostSteal.stealSeconds() - s0
-        spark.catalog.clearCache()
-        System.gc()
-        (sec, steal)
-      }
+      val ts = (1 to reps).map(_ => Measure.queryRep(spark, sfDir, q, "qtime"))
       val repStr = ts.map { case (t, st) => f"$t%.2f(st=$st%.1f)" }.mkString(" ")
       println(f"QTIME ${q.name} $repStr min=${ts.map(_._1).min}%.2f")
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{CpuCanary, HostSteal}
+import graft.{CpuCanary, Measure}
 
 /** Canary calibration probe: prints this JVM's calibrated fixed-work
   * floor and a run of ratio readings with the steal delta beside each —
@@ -16,10 +16,10 @@ object CanaryProbe {
     val (calA, calG) = CpuCanary.calibrate()
     println(f"CANARY cal_alu=$calA%.4f cal_gather=$calG%.4f s/pass")
     (1 to passes).foreach { i =>
-      val st0 = HostSteal.stealSeconds()
+      val st0 = Measure.stealSeconds()
       val (ra, rg) = CpuCanary.reading()
-      val st = if (st0 < 0) -1.0 else HostSteal.stealSeconds() - st0
-      val clean = CpuCanary.isClean((ra, rg))
+      val st = Measure.stealDelta(st0, Measure.stealSeconds())
+      val clean = Measure.FreshJvm.canaryOk((ra, rg))
       println(f"CANARY pass=$i alu_ratio=$ra%.3f gather_ratio=$rg%.3f clean=$clean steal=$st%.1f")
     }
   }

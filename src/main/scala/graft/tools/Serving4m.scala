@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Measure
 import graft.functions.VectorKernels
 
 /** Clean-JVM 4M serving crossover measurement, spawned by Bench as a
@@ -25,8 +26,8 @@ import graft.functions.VectorKernels
   *    tier's whole block; per-tier rep spreads are reported;
   *  - a fixed-work CPU canary (graft.CpuCanary: ALU spin + LLC gather,
   *    calibrated in THIS JVM) runs before/between/after the epochs;
-  *    an epoch is CLEAN only if its steal delta is ≤ 2 CPU-s and its
-  *    bounding canary readings are clean. The headline per-tier QPS is
+  *    an epoch is CLEAN only if its steal delta is ≤ 2 CPU-s (or
+  *    unreadable) and its bounding canary readings are clean. The headline per-tier QPS is
   *    the best CLEAN epoch; if no epoch is clean the artifact says
   *    "epoch_dirty": true and the ratio must not be graded.
   *
@@ -91,37 +92,22 @@ object Serving4m {
     }
     System.gc()
     val (calA, calG) = graft.CpuCanary.calibrate()
-    def t(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     // interleaved epochs: a burst hits all three tiers of one epoch, not
     // one tier's whole block — the inter-tier RATIO survives contention
     // that would poison per-tier blocks
     val Epochs = 5
-    val tIvf = new Array[Double](Epochs)
-    val tPq = new Array[Double](Epochs)
-    val tBq = new Array[Double](Epochs)
-    val epochSteal = new Array[Double](Epochs)
-    val canaries = new Array[(Double, Double)](Epochs + 1)
-    canaries(0) = graft.CpuCanary.reading()
-    var e = 0
-    while (e < Epochs) {
-      val st0 = graft.HostSteal.stealSeconds()
-      tIvf(e) = t(qBytes.foreach(q => ivf.search(q, 10, nprobe)))
-      tPq(e) = t(queries.foreach(q => ivfpq.search(q, 10, nprobe, candK)))
-      tBq(e) = t(queries.foreach(q => ivfbq.search(q, 10, nprobe, candK)))
-      epochSteal(e) =
-        if (st0 < 0) -1.0 else graft.HostSteal.stealSeconds() - st0
-      canaries(e + 1) = graft.CpuCanary.reading()
-      e += 1
+    val ep = Measure.epochs(Epochs) { _ =>
+      (Measure.seconds(qBytes.foreach(q => ivf.search(q, 10, nprobe))),
+        Measure.seconds(queries.foreach(q => ivfpq.search(q, 10, nprobe, candK))),
+        Measure.seconds(queries.foreach(q => ivfbq.search(q, 10, nprobe, candK))))
     }
-    // an epoch is CLEAN iff steal ≤ 2 CPU-s and both bounding canary
-    // readings are clean — the two-sided verdict
-    val cleanEpochs = (0 until Epochs).filter { e =>
-      epochSteal(e) >= 0 && epochSteal(e) <= 2.0 &&
-        graft.CpuCanary.isClean(canaries(e)) &&
-        graft.CpuCanary.isClean(canaries(e + 1))
-    }
+    val tIvf = ep.values.map(_._1)
+    val tPq = ep.values.map(_._2)
+    val tBq = ep.values.map(_._3)
+    // an epoch is CLEAN iff steal ≤ 2 CPU-s (unknown steal leaves it to
+    // the canaries) and both bounding canary readings are clean at the
+    // fresh-JVM bounds — the two-sided verdict
+    val cleanEpochs = (0 until Epochs).filter(ep.clean(Measure.FreshJvm, _))
     val epochDirty = cleanEpochs.isEmpty
     val pick = if (epochDirty) 0 until Epochs else cleanEpochs
     val bIvf = pick.map(tIvf).min
@@ -138,7 +124,7 @@ object Serving4m {
     val ratioEpoch = pick.minBy(e => tIvf(e) + tPq(e) + tBq(e))
     val ratioPq = tIvf(ratioEpoch) / tPq(ratioEpoch)
     val ratioBq = tIvf(ratioEpoch) / tBq(ratioEpoch)
-    def ratioArr(den: Array[Double]): String =
+    def ratioArr(den: IndexedSeq[Double]): String =
       (0 until Epochs).map(e => f"${tIvf(e) / den(e)}%.2f")
         .mkString("[", ",", "]")
     val rIvf = recall(qBytes.map(q => ivf.search(q, 10, nprobe)))
@@ -146,10 +132,10 @@ object Serving4m {
     val rBq = recall(queries.map(q => ivfbq.search(q, 10, nprobe, candK)))
     val probed = qBytes.map(q => ivf.probedRows(q, nprobe).toDouble).sum /
       qBytes.length
-    def qpsArr(a: Array[Double]): String =
+    def qpsArr(a: IndexedSeq[Double]): String =
       a.map(x => f"${100.0 / x}%.0f").mkString("[", ",", "]")
     def canArr(sel: ((Double, Double)) => Double): String =
-      canaries.map(c => f"${sel(c)}%.2f").mkString("[", ",", "]")
-    println(f"""{"corpus":$n,"cells":$cells,"nprobe":$nprobe,"cand_k":$candK,"isolated_jvm":true,"interleaved_epochs":$Epochs,"clean_epochs":${cleanEpochs.length},"epoch_dirty":$epochDirty,"epoch_steal":${epochSteal.map(s => f"$s%.1f").mkString("[", ",", "]")},"canary_cal":[$calA%.4f,$calG%.4f],"canary_alu":${canArr(_._1)},"canary_gather":${canArr(_._2)},"mean_probed_rows":$probed%.0f,"ivf_probed_mb_per_q":${probed * dim / 1e6}%.1f,"ivfpq_probed_mb_per_q":${probed * m / 1e6}%.1f,"ivf_qps":${100.0 / bIvf}%.0f,"ivf_reps_qps":${qpsArr(tIvf)},"ivf_recall10":$rIvf%.3f,"ivfpq_qps":${100.0 / bPq}%.0f,"ivfpq_reps_qps":${qpsArr(tPq)},"ivfpq_recall10":$rPq%.3f,"ivfpq_vs_ivf":$ratioPq%.2f,"ivfpq_vs_ivf_per_epoch":${ratioArr(tPq)},"ivfbq_qps":${100.0 / bBq}%.0f,"ivfbq_reps_qps":${qpsArr(tBq)},"ivfbq_recall10":$rBq%.3f,"ivfbq_vs_ivf":$ratioBq%.2f,"ivfbq_vs_ivf_per_epoch":${ratioArr(tBq)},"ratio_epoch":$ratioEpoch}""")
+      ep.canaries.map(c => f"${sel(c)}%.2f").mkString("[", ",", "]")
+    println(f"""{"corpus":$n,"cells":$cells,"nprobe":$nprobe,"cand_k":$candK,"isolated_jvm":true,"interleaved_epochs":$Epochs,"clean_epochs":${cleanEpochs.length},"epoch_dirty":$epochDirty,"epoch_steal":${ep.steal.map(s => f"$s%.1f").mkString("[", ",", "]")},"canary_cal":[$calA%.4f,$calG%.4f],"canary_alu":${canArr(_._1)},"canary_gather":${canArr(_._2)},"mean_probed_rows":$probed%.0f,"ivf_probed_mb_per_q":${probed * dim / 1e6}%.1f,"ivfpq_probed_mb_per_q":${probed * m / 1e6}%.1f,"ivf_qps":${100.0 / bIvf}%.0f,"ivf_reps_qps":${qpsArr(tIvf)},"ivf_recall10":$rIvf%.3f,"ivfpq_qps":${100.0 / bPq}%.0f,"ivfpq_reps_qps":${qpsArr(tPq)},"ivfpq_recall10":$rPq%.3f,"ivfpq_vs_ivf":$ratioPq%.2f,"ivfpq_vs_ivf_per_epoch":${ratioArr(tPq)},"ivfbq_qps":${100.0 / bBq}%.0f,"ivfbq_reps_qps":${qpsArr(tBq)},"ivfbq_recall10":$rBq%.3f,"ivfbq_vs_ivf":$ratioBq%.2f,"ivfbq_vs_ivf_per_epoch":${ratioArr(tBq)},"ratio_epoch":$ratioEpoch}""")
   }
 }

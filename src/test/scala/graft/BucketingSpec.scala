@@ -58,7 +58,7 @@ class BucketingSpec extends SparkSpec {
     // lives on the DIM side only, and Spark injects a dynamic pruning
     // subquery into the fact scan — at 100 TB this is what keeps a
     // star join from scanning every date/tenant partition.
-    val dir = java.nio.file.Files.createTempDirectory("dpp-fact").toString
+    val dir = tempDir("dpp-fact")
     val li = Tables.lineitem(spark, sf001)
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
     val totalParts = spark.read.parquet(dir)
@@ -69,7 +69,7 @@ class BucketingSpec extends SparkSpec {
     // the dim must be a real datasource: a Filter over an in-memory
     // LocalRelation is constant-folded away by ConvertToLocalRelation,
     // erasing the selective-predicate signal DPP keys on
-    val dimDir = java.nio.file.Files.createTempDirectory("dpp-dim").toString
+    val dimDir = tempDir("dpp-dim")
     Seq(("A", "accepted"), ("R", "returned"), ("N", "neutral"))
       .toDF("flag", "label").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)

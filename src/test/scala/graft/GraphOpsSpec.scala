@@ -43,6 +43,31 @@ class GraphOpsSpec extends SparkSpec {
     assert(comps === Seq((1L, 3L), (10L, 3L), (20L, 5L), (30L, 2L)))
   }
 
+  // Spark jobs each labeler schedules on the graph below (measured in
+  // this suite's local[4] session); more is a scheduling regression
+  private val PropagationJobs = 381
+  private val DoublingJobs = 47
+
+  test("labelers agree on a chain plus cliques within their job counts") {
+    // a 64-node chain (diameter 63, the propagation worst case) plus three
+    // 40-node cliques (the dense near-dup regime), disjoint id ranges: at
+    // bench scale the labeler consumers are dominated by per-job fixed
+    // cost, so jobs per labeling is the number that predicts their time
+    val chainEdges = (0L until 63L).map(i => (i, i + 1))
+    val cliques = (0 until 3).flatMap { c =>
+      val base = 1000L * (c + 1)
+      for (i <- 0L until 40L; j <- (i + 1) until 40L) yield (base + i, base + j)
+    }
+    val und = (chainEdges ++ cliques).toDF("src", "dst")
+    val sym = und.unionAll(und.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint(true)
+    val ((plab, _), pjobs) = jobsDuring(ops.GraphOps.propagationLabels(sym, maxIter = 80))
+    val ((dlab, _), djobs) = jobsDuring(ops.GraphOps.doublingLabels(sym, maxIter = 16))
+    assert(plab.except(dlab).isEmpty && dlab.except(plab).isEmpty)
+    assert(pjobs <= PropagationJobs, s"propagation ran $pjobs jobs")
+    assert(djobs <= DoublingJobs, s"doubling ran $djobs jobs")
+  }
+
   test("propagation fails loudly (not wrongly) when rounds run out") {
     val edges = chain(16).localCheckpoint(true)
     val ex = intercept[IllegalArgumentException] {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class IvfAtRestSpec extends SparkSpec {
 
   private lazy val indexPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-at-rest").toString
+    val dir = tempDir("ivf-at-rest")
     IvfIndex.build(Tables.embeddings(spark, sf001), dir)
     dir
   }
@@ -59,7 +59,7 @@ class IvfAtRestSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf001)
     val half1 = emb.filter(col("vec_id") < 250)
     val half2 = emb.filter(col("vec_id") >= 250)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-append").toString
+    val dir = tempDir("ivf-append")
     IvfIndex.build(half1, dir)
     def dataFiles(): Set[String] = {
       val root = new java.io.File(s"$dir/data")
@@ -97,7 +97,7 @@ class IvfAtRestSpec extends SparkSpec {
 
   test("probe after append still prunes and equals the exact cell-restricted scan") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-append-probe").toString
+    val dir = tempDir("ivf-append-probe")
     IvfIndex.build(emb.filter(col("vec_id") < 250), dir)
     IvfIndex.append(emb.filter(col("vec_id") >= 250), dir)
     val query = emb.filter(col("vec_id") === 300)
@@ -130,7 +130,7 @@ class IvfAtRestSpec extends SparkSpec {
 
   test("rebuild acts on measured drift: fit delta shrinks, sidecar versioned, probe parity holds") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-rebuild").toString
+    val dir = tempDir("ivf-rebuild")
     IvfIndex.build(emb.filter(col("vec_id") < 250), dir)
     IvfIndex.append(emb.filter(col("vec_id") >= 250), dir)
 
@@ -203,7 +203,7 @@ class IvfAtRestSpec extends SparkSpec {
 
   test("vacuumVersions prunes old archived quantizers, keeps live + recent") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-vacuum").toString
+    val dir = tempDir("ivf-vacuum")
     IvfIndex.build(emb, dir)
     // three rebuilds archive three quantizer generations
     assert((1 to 3).map(_ => IvfIndex.rebuild(spark, dir)) == Seq(1, 2, 3))
@@ -245,11 +245,11 @@ class IvfAtRestSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf001)
     intercept[IllegalArgumentException] {
       IvfIndex.build(emb.filter(col("vec_id") < 0),
-        java.nio.file.Files.createTempDirectory("ivf-empty").toString)
+        tempDir("ivf-empty"))
     }
     intercept[IllegalArgumentException] {
       IvfIndex.build(emb.withColumn("label", lit(null).cast("string")),
-        java.nio.file.Files.createTempDirectory("ivf-null-label").toString)
+        tempDir("ivf-null-label"))
     }
   }
 

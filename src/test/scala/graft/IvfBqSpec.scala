@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class IvfBqSpec extends SparkSpec {
 
   private lazy val indexPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("ivfbq").toString
+    val dir = tempDir("ivfbq")
     IvfBqIndex.build(Tables.embeddings(spark, sf001), dir)
     dir
   }
@@ -94,8 +94,8 @@ class IvfBqSpec extends SparkSpec {
 
   test("streaming micro-batches maintain the index like batch appends (frozen centroids)") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfbq-stream").toString
-    val inDir = java.nio.file.Files.createTempDirectory("ivfbq-feed").toString
+    val dir = tempDir("ivfbq-stream")
+    val inDir = tempDir("ivfbq-feed")
     IvfBqIndex.build(emb.filter(col("vec_id") < 250), dir)
     // two staged files -> two micro-batches (maxFilesPerTrigger=1),
     // ordered via the Staged mtime contract
@@ -123,7 +123,7 @@ class IvfBqSpec extends SparkSpec {
 
   test("rebuild re-trains the coarse quantizer (the tier's only drifting artifact)") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfbq-rebuild").toString
+    val dir = tempDir("ivfbq-rebuild")
     IvfBqIndex.build(emb.filter(col("vec_id") < 250), dir)
     IvfBqIndex.append(emb.filter(col("vec_id") >= 250), dir)
 
@@ -160,7 +160,7 @@ class IvfBqSpec extends SparkSpec {
 
   test("append assigns against frozen centroids and only adds files") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfbq-app").toString
+    val dir = tempDir("ivfbq-app")
     IvfBqIndex.build(emb.filter(col("vec_id") < 400), dir)
     val before = spark.read.parquet(s"$dir/data")
       .select(input_file_name()).distinct().collect().map(_.getString(0)).toSet

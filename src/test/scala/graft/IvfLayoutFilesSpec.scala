@@ -49,7 +49,7 @@ class IvfLayoutFilesSpec extends SparkSpec {
     test(s"$name: build, append and rebuild write one file per cell") {
       uncoalesced {
         val emb = Tables.embeddings(spark, sf001)
-        val dir = java.nio.file.Files.createTempDirectory("ivf-files").toString
+        val dir = tempDir("ivf-files")
         build(emb.filter(col("vec_id") < 250), dir)
         assertOnePerCell(dir, "build")
 

@@ -17,7 +17,7 @@ class IvfPqSpec extends SparkSpec {
   private val K = PqQueries.K
 
   private lazy val indexPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val dir = tempDir("ivfpq")
     IvfPqIndex.build(Tables.embeddings(spark, sf001), dir)
     dir
   }
@@ -92,8 +92,8 @@ class IvfPqSpec extends SparkSpec {
 
   test("streaming micro-batches maintain the index like batch appends (frozen quantizers)") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-stream").toString
-    val inDir = java.nio.file.Files.createTempDirectory("ivfpq-feed").toString
+    val dir = tempDir("ivfpq-stream")
+    val inDir = tempDir("ivfpq-feed")
     IvfPqIndex.build(emb.filter(col("vec_id") < 250), dir)
     val cbFrozen = spark.read.parquet(s"$dir/codebook")
       .orderBy("idx").collect().map(_.getDouble(1))
@@ -123,7 +123,7 @@ class IvfPqSpec extends SparkSpec {
 
   test("append encodes against the frozen codebook and only adds files") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-append").toString
+    val dir = tempDir("ivfpq-append")
     IvfPqIndex.build(emb.filter(col("vec_id") < 250), dir)
     val cbBefore = spark.read.parquet(s"$dir/codebook")
       .orderBy("idx").collect().map(_.getDouble(1))
@@ -150,7 +150,7 @@ class IvfPqSpec extends SparkSpec {
 
   test("residual-built index at rest: marker, frozen-encode append, probe replay, rebuild") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-residual").toString
+    val dir = tempDir("ivfpq-residual")
     IvfPqIndex.buildResidual(emb.filter(col("vec_id") < 250), dir)
     assert(IvfPqIndex.isResidual(spark, dir))
     val cents = spark.read.parquet(s"$dir/centroids").collect()
@@ -238,7 +238,7 @@ class IvfPqSpec extends SparkSpec {
 
   test("rebuild re-trains codebook + centroids on the current corpus and versions both") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-rebuild").toString
+    val dir = tempDir("ivfpq-rebuild")
     IvfPqIndex.build(emb.filter(col("vec_id") < 250), dir)
     IvfPqIndex.append(emb.filter(col("vec_id") >= 250), dir)
     val cbFrozen = spark.read.parquet(s"$dir/codebook")
@@ -286,7 +286,7 @@ class IvfPqSpec extends SparkSpec {
 
   test("rebuild of an OPQ-built index re-trains and versions the rotation too") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-opq-rebuild").toString
+    val dir = tempDir("ivfpq-opq-rebuild")
     IvfPqIndex.buildOpq(emb.filter(col("vec_id") < 250), dir)
     val rotFrozen = IvfPqIndex.readRotation(spark, dir).get
     IvfPqIndex.append(emb.filter(col("vec_id") >= 250), dir)
@@ -311,7 +311,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("OPQ build: rotation sidecar roundtrips; codes and probe live in coding space") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-opq").toString
+    val dir = tempDir("ivfpq-opq")
     val emb = Tables.embeddings(spark, sf001)
     IvfPqIndex.buildOpq(emb, dir)
     // sidecar roundtrip: the saved rotation equals the trained one
@@ -346,7 +346,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("OPQ append encodes against the frozen rotation + codebook") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-opq-app").toString
+    val dir = tempDir("ivfpq-opq-app")
     val emb = Tables.embeddings(spark, sf001)
     IvfPqIndex.buildOpq(emb.filter(col("vec_id") < 300), dir)
     val rot = IvfPqIndex.readRotation(spark, dir).get

@@ -190,7 +190,7 @@ class LocalIvfQuantSpec extends SparkSpec {
   test("fromAtRest replica serves an at-rest IvfPq layout on its frozen sidecars") {
     import graft.store.{IvfPqIndex, QuantizedIndex}
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-local").toString
+    val dir = tempDir("ivfpq-local")
     IvfPqIndex.build(emb, dir)
     val rep = LocalIvfPqIndex.fromAtRest(spark, dir, emb)
     assert(rep.count == emb.count())
@@ -214,12 +214,12 @@ class LocalIvfQuantSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       LocalIvfPqIndex.fromAtRest(spark, dir, emb.filter(col("vec_id") < 100)))
     // an OPQ layout is refused (format-flag check)
-    val dirOpq = java.nio.file.Files.createTempDirectory("ivfpq-local-opq").toString
+    val dirOpq = tempDir("ivfpq-local-opq")
     IvfPqIndex.buildOpq(emb, dirOpq)
     intercept[IllegalArgumentException](
       LocalIvfPqIndex.fromAtRest(spark, dirOpq, emb))
     // and so is a residual-coded layout
-    val dirRes = java.nio.file.Files.createTempDirectory("ivfpq-local-res").toString
+    val dirRes = tempDir("ivfpq-local-res")
     IvfPqIndex.buildResidual(emb, dirRes)
     intercept[IllegalArgumentException](
       LocalIvfPqIndex.fromAtRest(spark, dirRes, emb))
@@ -228,7 +228,7 @@ class LocalIvfQuantSpec extends SparkSpec {
   test("fromAtRest replica serves an at-rest IvfBq layout on its frozen sidecars") {
     import graft.store.{IvfBqIndex, QuantizedIndex}
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("ivfbq-local").toString
+    val dir = tempDir("ivfbq-local")
     IvfBqIndex.build(emb, dir)
     val rep = LocalIvfBqIndex.fromAtRest(spark, dir, emb)
     assert(rep.count == emb.count())

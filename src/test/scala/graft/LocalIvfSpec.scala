@@ -15,7 +15,7 @@ class LocalIvfSpec extends SparkSpec {
   private val NPROBE = 3
 
   private lazy val atRestPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("ivf-local").toString
+    val dir = tempDir("ivf-local")
     IvfIndex.build(Tables.embeddings(spark, sf001), dir)
     dir
   }

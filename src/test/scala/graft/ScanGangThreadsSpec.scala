@@ -35,7 +35,7 @@ class ScanGangThreadsSpec extends SparkSpec {
     LocalIvfIndex.train(ids, vecs, numCells = 4).search(qb, 10, 4)
     LocalIvfPqIndex.train(ids, vecs, 4, m, kSub, cb).search(q, 10, 4, 100)
     LocalIvfBqIndex.train(ids, vecs, numCells = 4).search(q, 10, 4, 100)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-gang").toString
+    val dir = tempDir("ivf-gang")
     IvfIndex.build(Tables.embeddings(spark, sf001), dir)
     (0 until 2).foreach(_ => LocalIvfIndex.fromAtRest(spark, dir))
     assert(gangThreads == afterFirst,

@@ -69,7 +69,7 @@ class SelectionSpec extends SparkSpec {
     // the estimator is EXACT (ADVICE r8: the former 0-or-1-row tau
     // relation annihilated the sample via the cross join)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("prio-small").toString
+    val dir = tempDir("prio-small")
     (1L to 10L).map(i => (i, s"tok$i text", "en", "t", 10L + i))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -9,7 +9,7 @@ class SourcesSpec extends SparkSpec {
 
   test("CSV round-trip preserves the documents table") {
     val docs = Tables.documents(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("csv_rt").toString
+    val dir = tempDir("csv_rt")
     docs.write.mode("overwrite").option("header", "true").csv(dir)
     val re = spark.read.option("header", "true")
       .schema(docs.schema).csv(dir)
@@ -21,7 +21,7 @@ class SourcesSpec extends SparkSpec {
 
   test("JSON round-trip preserves embeddings exactly") {
     val emb = Tables.embeddings(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("json_rt").toString
+    val dir = tempDir("json_rt")
     emb.write.mode("overwrite").json(dir)
     val re = spark.read.schema(emb.schema).json(dir)
     assert(re.count() == emb.count())
@@ -32,7 +32,7 @@ class SourcesSpec extends SparkSpec {
 
   test("ORC round-trip preserves documents exactly") {
     val docs = Tables.documents(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("orc_rt").toString
+    val dir = tempDir("orc_rt")
     docs.write.mode("overwrite").orc(dir)
     val re = spark.read.orc(dir)
     assert(re.schema == docs.schema)
@@ -43,7 +43,7 @@ class SourcesSpec extends SparkSpec {
 
   test("lang-partitioned parquet write prunes partitions on read") {
     val docs = Tables.documents(spark, sf001)
-    val dir = java.nio.file.Files.createTempDirectory("part_wr").toString
+    val dir = tempDir("part_wr")
     docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val re = spark.read.parquet(dir).filter(col("lang") === "en")
     assert(re.count() == docs.filter(col("lang") === "en").count())

@@ -46,8 +46,8 @@ class StreamingSpec extends SparkSpec {
     // final complete-mode snapshot equals the batch fold over EVERYTHING —
     // any lost or doubled partial breaks the bit-equality.
     import org.apache.spark.sql.functions.{col, unix_micros, expr}
-    val inDir = java.nio.file.Files.createTempDirectory("hop-ckpt-in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("hop-ckpt").toString
+    val inDir = tempDir("hop-ckpt-in")
+    val ckpt = tempDir("hop-ckpt")
     val raw = EventsStream.normalize(
       spark.read.parquet(s"$sf001/events.parquet"))
     val cut = raw.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
@@ -180,7 +180,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark removes retransmitted events") {
     // simulate an at-least-once source: the same events file delivered twice
-    val dir = java.nio.file.Files.createTempDirectory("dup_events")
+    val dir = java.nio.file.Paths.get(tempDir("dup_events"))
     val src = java.nio.file.Paths.get(sf001, "events.parquet")
     java.nio.file.Files.copy(src, dir.resolve("a.parquet"))
     java.nio.file.Files.copy(src, dir.resolve("b.parquet"))

@@ -130,7 +130,7 @@ class VectorStoreSpec extends SparkSpec {
   // (benchmark_suite.py:313-319) to full result equality
   test("save/load roundtrip preserves full search results") {
     val st = freshStore()
-    val dir = java.nio.file.Files.createTempDirectory("vstore").toString
+    val dir = tempDir("vstore")
     val before = st.search(Array(0.5f, 0.5f, 0f, 0f), k = 4).collect().toSeq
     st.save(dir)
     val re = VectorStore.load(spark, dir)
@@ -147,7 +147,7 @@ class VectorStoreSpec extends SparkSpec {
     // several adds, each of which lands in its own partitions
     (0 until 40).grouped(10).foreach(g => st.addVectors(mkRows(g.map(i =>
       (s"r$i", Seq(i.toFloat / 40, 1f, 0f, 0f), Map("g" -> (i % 3).toString))))))
-    val dir = java.nio.file.Files.createTempDirectory("vstore-bucketed").toString
+    val dir = tempDir("vstore-bucketed")
     st.save(dir, numBuckets = 8)
     // the layout is hive-partitioned on the id hash
     val parts = new java.io.File(s"$dir/data").listFiles()
@@ -184,7 +184,7 @@ class VectorStoreSpec extends SparkSpec {
     st.addVectors(mkRows(Seq(
       ("a", Seq(1f, 0f, 0f, 0f), Map("g" -> "0")),
       ("b", Seq(0f, 1f, 0f, 0f), Map.empty[String, String]))))
-    val dir = java.nio.file.Files.createTempDirectory("vstore-versions").toString
+    val dir = tempDir("vstore-versions")
     assert(VectorStore.versions(spark, dir).isEmpty)
     assert(st.saveVersion(dir) == 0)
     // mutate: delete a row, add two more, commit v1
@@ -214,7 +214,7 @@ class VectorStoreSpec extends SparkSpec {
   test("vacuum keeps the newest versions, drops the rest, never reuses numbers") {
     val st = VectorStore.create(spark, 4)
     st.addVectors(mkRows(Seq(("a", Seq(1f, 0f, 0f, 0f), Map.empty[String, String]))))
-    val dir = java.nio.file.Files.createTempDirectory("vstore-vacuum").toString
+    val dir = tempDir("vstore-vacuum")
     // stack four checkpoints, mutating between them so snapshots differ
     (0 until 4).foreach { i =>
       if (i > 0) st.addVectors(mkRows(Seq(
@@ -242,7 +242,7 @@ class VectorStoreSpec extends SparkSpec {
   test("mutations invalidate the at-rest lookup path (no stale disk reads)") {
     val st = VectorStore.create(spark, 4)
     st.addVectors(mkRows(Seq(("a", Seq(1f, 0f, 0f, 0f), Map.empty[String, String]))))
-    val dir = java.nio.file.Files.createTempDirectory("vstore-stale").toString
+    val dir = tempDir("vstore-stale")
     st.save(dir)
     val re = VectorStore.load(spark, dir)
     // a row added AFTER load must be visible (the disk path wouldn't have it)
